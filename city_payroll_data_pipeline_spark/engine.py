@@ -5,8 +5,7 @@ Reference flow (serve_flight.py:81-221): do_put → auth → filename gate
 → save raw CSV → SQLMesh plan/apply (stg, fct into a DuckDB file) →
 checkpoint. Here: read CSV (all-string) → stg/fct DataFrame plan →
 one overwrite parquet write. The two-layer DAG executes as a single
-Catalyst plan — no intermediate materialization of the staging layer
-unless ``materialize_staging=True`` (kept for bronze-audit parity).
+Catalyst plan — the staging layer is never materialized.
 """
 
 from __future__ import annotations
@@ -93,7 +92,6 @@ class Engine:
         password: str,
         csv_path: str,
         processed_at=None,
-        materialize_staging: bool = False,
     ) -> str:
         """Upload→transform one CSV for a tenant; returns the Clean
         warehouse path of the fact table."""
@@ -118,10 +116,6 @@ class Engine:
         stg = stg_fn(raw, processed_at=processed_at)
 
         clean = self.registry.clean_path(client_id, csv_path)
-        if materialize_staging:
-            sinks.write_parquet(stg, os.path.join(clean, f"stg_{industry}"))
-            stg = self.spark.read.parquet(os.path.join(clean, f"stg_{industry}"))
-
         fct = validate_fact_contract(fct_fn(stg))
         sinks.write_parquet(fct, os.path.join(clean, f"fct_{industry}"))
         return clean
@@ -172,13 +166,13 @@ class Engine:
     ) -> DataFrame:
         """Ad-hoc SQL over one tenant upload — beyond-parity: the
         reference serves only two fixed queries (serve_flight.py:
-        291,295); Spark SQL makes the whole fact (and staging, if
-        materialized) queryable.
+        291,295); Spark SQL makes the whole fact table queryable as
+        the ``fct`` view.
 
         Isolation model: every call runs in a fresh
         ``SparkSession.newSession()`` — same SparkContext (no JVM
         cost), but a private temp-view namespace and SQLConf. Only
-        this upload's ``fct`` / ``stg`` views exist there, so
+        this upload's ``fct`` view exists there, so
         interleaved calls from concurrent tenants (e.g. via the
         threaded Flight facade) can never observe each other's views.
         ``spark.sql.runSQLOnFiles`` is disabled in the subsession, so
@@ -197,9 +191,4 @@ class Engine:
         _assert_plain_query(session, query)
         fct = session.read.parquet(os.path.join(clean, f"fct_{tenant.industry}"))
         fct.createOrReplaceTempView("fct")
-        stg_path = os.path.join(clean, f"stg_{tenant.industry}")
-        try:
-            session.read.parquet(stg_path).createOrReplaceTempView("stg")
-        except Exception:
-            pass  # staging not materialized for this upload
         return session.sql(query)

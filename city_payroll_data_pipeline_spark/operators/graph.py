@@ -244,6 +244,14 @@ def _pagerank_collected(
     out_w: dict = {}
     for r in rows:
         out_w[r["src"]] = out_w.get(r["src"], 0) + r["weight"]
+    zero_out = sorted(v for v, w in out_w.items() if w == 0)
+    if zero_out:
+        # contrib divides by out_w(src); weights must be positive, so
+        # fail loudly like _hits_collected's zero total
+        raise ValueError(
+            "pagerank_scaled: zero total out-weight at source node(s) "
+            f"{zero_out[:5]}; edge weights must be positive"
+        )
 
     if teleport_node is None:
         base = {

@@ -15,22 +15,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def budget_report(fct: DataFrame) -> DataFrame:
-    """THE report query (serve_flight.py:295): per-job-title headcount
-    and total budget, costliest first.
+def budget_aggregate(fct: DataFrame) -> DataFrame:
+    """Per-job-title headcount and total budget, unsorted — the
+    aggregation the batch report and the streaming report share.
 
     GROUP BY job_title shuffles once; Catalyst plans partial+final
     HashAggregate, so the map-side combine keeps shuffle volume
     proportional to |distinct job_title|, not |rows|.
     """
-    return (
-        fct.groupBy("job_title")
-        .agg(
-            F.count("*").alias("total_employee"),
-            F.sum("total_amount").alias("total_budget"),
-        )
-        .orderBy(F.desc("total_budget"))
+    return fct.groupBy("job_title").agg(
+        F.count("*").alias("total_employee"),
+        F.sum("total_amount").alias("total_budget"),
     )
+
+
+def budget_report(fct: DataFrame) -> DataFrame:
+    """THE report query (serve_flight.py:295): budget_aggregate,
+    costliest first."""
+    return budget_aggregate(fct).orderBy(F.desc("total_budget"))
 
 
 def full_export(fct: DataFrame) -> DataFrame:

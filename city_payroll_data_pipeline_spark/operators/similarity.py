@@ -657,6 +657,26 @@ def pq_encode(
     return best.select("vec_id", "m", cw, d2)
 
 
+def pq_lut(
+    quantized_queries: DataFrame, codebook: DataFrame, m_sub: int, d_sub: int
+) -> DataFrame:
+    """ADC lookup table (query_id, m, cw, dotv): the exact bigint dot of
+    every query subvector with every codeword of its subspace —
+    queries × m_sub × k_codes rows, broadcast by every ADC scorer."""
+    return (
+        quantized_queries.select(
+            F.col("vec_id").alias("query_id"),
+            F.posexplode(pq_subvectors(F.col("q"), m_sub, d_sub)).alias(
+                "m", "sub"
+            ),
+        )
+        .join(F.broadcast(codebook), "m")
+        .select(
+            "query_id", "m", "cw", dot_q(F.col("sub"), F.col("cq")).alias("dotv")
+        )
+    )
+
+
 def pq_topk(
     df: DataFrame,
     id_col: str,
@@ -697,18 +717,7 @@ def pq_topk(
     )
     enc = pq_encode(corpus, cb, m_sub, d_sub)
     qry = with_quantized(queries if queries is not None else df, id_col, vec_col)
-    lut = (
-        qry.select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode(pq_subvectors(F.col("q"), m_sub, d_sub)).alias(
-                "m", "sub"
-            ),
-        )
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id", "m", "cw", dot_q(F.col("sub"), F.col("cq")).alias("dotv")
-        )
-    )
+    lut = pq_lut(qry, cb, m_sub, d_sub)
     scored = (
         enc.join(F.broadcast(lut), ["m", "cw"])
         .filter(F.col("query_id") != F.col("vec_id"))
@@ -778,18 +787,7 @@ def ivfpq_topk(
     qry_cells = ivf_assign(qry, cents, n_probe).select(
         F.col("vec_id").alias("query_id"), "list_id"
     )
-    lut = (
-        qry.select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode(pq_subvectors(F.col("q"), m_sub, d_sub)).alias(
-                "m", "sub"
-            ),
-        )
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id", "m", "cw", dot_q(F.col("sub"), F.col("cq")).alias("dotv")
-        )
-    )
+    lut = pq_lut(qry, cb, m_sub, d_sub)
     # each corpus vector is in exactly one cell and each query probes
     # distinct cells, so a (query, neighbor) pair survives at most once
     scored = (
@@ -892,18 +890,7 @@ def ivfpq_residual_topk(
         "list_id",
         dot_q(F.col("q"), F.col("cq")).alias("qc_dot"),
     )
-    lut = (
-        qry.select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode(pq_subvectors(F.col("q"), m_sub, d_sub)).alias(
-                "m", "sub"
-            ),
-        )
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id", "m", "cw", dot_q(F.col("sub"), F.col("cq")).alias("dotv")
-        )
-    )
+    lut = pq_lut(qry, cb, m_sub, d_sub)
     scored = (
         enc.join(F.broadcast(qc), "list_id")
         .filter(F.col("query_id") != F.col("vec_id"))

@@ -17,11 +17,4 @@ PIPELINES = {
     "hospital": (hospital.stg_hospital, hospital.fct_hospital),
 }
 
-
-def run_pipeline(industry: str, raw_df, processed_at=None):
-    """raw (all-string) DataFrame -> fact DataFrame for one industry."""
-    stg, fct = PIPELINES[industry]
-    return fct(stg(raw_df, processed_at=processed_at))
-
-
-__all__ = ["PIPELINES", "run_pipeline", "corporate", "education", "hospital"]
+__all__ = ["PIPELINES", "corporate", "education", "hospital"]

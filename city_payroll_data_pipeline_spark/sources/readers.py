@@ -26,12 +26,20 @@ def read_csv_all_string(
     """S1/S2: CSV scan, header row, quote='"', every column StringType.
 
     ``columns``: known header list → explicit schema (preferred; zero
-    inference). Otherwise headers are taken from the file but types stay
-    string (Spark's default without inferSchema).
+    inference). The file's header must name exactly these columns in
+    this order (``enforceSchema=false``): a swapped or missing column
+    fails the scan with "CSV header does not conform to the schema"
+    instead of silently shifting values into the wrong fields.
+    Otherwise headers are taken from the file but types stay string
+    (Spark's default without inferSchema).
     ``normalize_names``: DuckDB-style header normalization (S2,
     stg_hospital.sql:28).
     """
-    reader = spark.read.option("header", True).option("quote", '"')
+    reader = (
+        spark.read.option("header", True)
+        .option("quote", '"')
+        .option("enforceSchema", False)
+    )
     if columns is not None:
         df = reader.schema(all_string_schema(columns)).csv(path)
     else:
@@ -54,12 +62,6 @@ def read_parquet(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
-
-
-def from_pandas(spark: SparkSession, pdf) -> DataFrame:
-    """S3: Arrow-accelerated ingest of a client-supplied pandas frame
-    (the reference's do_put path, serve_flight.py:148-149)."""
-    return spark.createDataFrame(pdf)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -102,11 +104,6 @@ def read_binary_files(
     if max_bytes is not None:
         df = df.filter(F.col("length") <= max_bytes)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:
-    """Load driver testdata parquet tables as a name->DataFrame dict."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
 
 
 def read_jsonl(

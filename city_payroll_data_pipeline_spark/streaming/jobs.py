@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from city_payroll_data_pipeline_spark.operators.reports import (
+    budget_aggregate,
+)
 from city_payroll_data_pipeline_spark.schemas import all_string_schema
 from city_payroll_data_pipeline_spark.sources.readers import normalize_columns
 
@@ -27,11 +30,14 @@ def stream_raw_csv(
     max_files_per_trigger: int = 100,
 ) -> DataFrame:
     """Unbounded all-string CSV source watching a Raw/ directory —
-    the streaming twin of readers.read_csv_all_string."""
+    the streaming twin of readers.read_csv_all_string, with the same
+    header check (a file whose header does not name ``columns`` in
+    order fails the micro-batch)."""
     df = (
         spark.readStream.schema(all_string_schema(columns))
         .option("header", True)
         .option("quote", '"')
+        .option("enforceSchema", False)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .csv(path)
     )
@@ -43,10 +49,7 @@ def streaming_budget_report(fct_stream: DataFrame) -> DataFrame:
     (identical semantics to reports.budget_report; complete-mode sink).
     The sort lives in the sink query, not here — streaming aggs cannot
     hold a global sort."""
-    return fct_stream.groupBy("job_title").agg(
-        F.count("*").alias("total_employee"),
-        F.sum("total_amount").alias("total_budget"),
-    )
+    return budget_aggregate(fct_stream)
 
 
 def streaming_event_stats(

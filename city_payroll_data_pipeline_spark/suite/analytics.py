@@ -2696,78 +2696,35 @@ FROM fp
 
 def q_ann_recall_report(spark, sf_dir, query_ids=None):
     from city_payroll_data_pipeline_spark.suite.vectors import (
-        K,
-        N_QUERIES,
-        q_cosine_topk,
         q_ivf_ann_topk,
         q_lsh_ann_topk,
         q_sq8_ann_topk,
+        recall_certificate,
     )
 
-    exact = q_cosine_topk(spark, sf_dir, query_ids).select(
-        "query_id", "neighbor_id"
-    )
-    total = K * (N_QUERIES if query_ids is None else len(query_ids))
-    # NOTE (r5): keep the per-retriever join+agg form. A measured
-    # union-all-approx-then-one-join rewrite was 45% SLOWER at sf0.1
-    # (8.3s vs 5.7s): the three independent per-part plans reuse the
-    # exact baseline's exchanges (ReusedExchange) and their small
-    # stages schedule in parallel, while the union serializes them
-    # behind one wide join.
-    parts = []
-    for name, fn in (
-        ("ivf", q_ivf_ann_topk),
-        ("lsh", q_lsh_ann_topk),
-        ("sq8", q_sq8_ann_topk),
-    ):
-        ap = fn(spark, sf_dir, query_ids).select("query_id", "neighbor_id")
-        parts.append(
-            ap.join(exact, ["query_id", "neighbor_id"]).agg(
-                F.lit(name).alias("retriever"),
-                F.count("*").alias("matched"),
-                F.lit(total).cast("long").alias("total"),
-                (F.count("*") / F.lit(total)).alias("recall_at_k"),
-            )
+    return recall_certificate(spark, sf_dir, (
+        (name, fn(spark, sf_dir, query_ids))
+        for name, fn in (
+            ("ivf", q_ivf_ann_topk),
+            ("lsh", q_lsh_ann_topk),
+            ("sq8", q_sq8_ann_topk),
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("retriever")
+    ), query_ids)
 
 
 def _ann_recall_report_sql(query_ids=None) -> str:
     from city_payroll_data_pipeline_spark.suite.vectors import (
-        K,
-        N_QUERIES,
-        _cosine_topk_sql,
         _ivf_ann_topk_sql,
         _lsh_ann_topk_sql,
         _sq8_ann_topk_sql,
+        recall_certificate_sql,
     )
 
-    total = K * (N_QUERIES if query_ids is None else len(query_ids))
-    arms = []
-    for name, sql in (
+    return recall_certificate_sql((
         ("ivf", _ivf_ann_topk_sql(query_ids)),
         ("lsh", _lsh_ann_topk_sql(query_ids)),
         ("sq8", _sq8_ann_topk_sql(query_ids)),
-    ):
-        arms.append(f"""
-SELECT '{name}' AS retriever,
-       COUNT(*) AS matched,
-       CAST({total} AS BIGINT) AS total,
-       CAST(COUNT(*) AS DOUBLE) / {total} AS recall_at_k
-FROM ({sql}) ap
-JOIN exact ON ap.query_id = exact.query_id
-          AND ap.neighbor_id = exact.neighbor_id""")
-    body = "\nUNION ALL\n".join(arms)
-    return f"""
-WITH exact AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM ({_cosine_topk_sql(query_ids)})
-)
-{body}
-ORDER BY retriever
-"""
+    ), query_ids)
 
 
 def q_ann_recall_report_sampled(spark, sf_dir):

@@ -895,11 +895,12 @@ FROM documents WHERE doc_id % 10 = 0
 
 def _near_corpus(spark, sf_dir):
     docs = table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
+    # exact integer floor of length·0.7: the oracle's 0.7 is a DECIMAL,
+    # while a double 0.7 sits just below 7/10 and floors 245.0 to 244
+    keep = F.expr("length(text) * 7 div 10").cast("int")
     trunc = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
-        F.col("text")
-        .substr(F.lit(1), F.floor(F.length("text") * 0.7).cast("int"))
-        .alias("text"),
+        F.col("text").substr(F.lit(1), keep).alias("text"),
     )
     return docs.unionAll(trunc)
 
@@ -3598,6 +3599,49 @@ _THUMB_H = 4
 _IMG_W = 16  # synthesized source images are 16px-wide grayscale
 
 
+def _map_documents(spark, sf_dir, body, schema, where=None):
+    """The multimodal family's per-document pass: one ``mapInPandas``
+    over ``documents`` (rows matching ``where``, if given), no shuffle,
+    blobs never leave their partition. ``body(doc_id, blob)`` gets the
+    text's UTF-8 bytes as the media blob and yields that document's
+    output rows in ``schema`` column order."""
+    import pandas as pd
+
+    from city_payroll_data_pipeline_spark.session import ship_package
+
+    docs = table(spark, sf_dir, "documents", spread=True)
+    ship_package(docs.sparkSession)
+    columns = [c.split()[0] for c in schema.split(",")]
+
+    def op(batches):
+        for pdf in batches:
+            rows = [
+                row
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+                for row in body(int(doc_id), text.encode("utf-8"))
+            ]
+            yield pd.DataFrame(rows, columns=columns)
+
+    if where is not None:
+        docs = docs.filter(where)
+    return docs.select("doc_id", "text").mapInPandas(op, schema)
+
+
+def _p5_image(blob):
+    """The image fixture: ``blob`` as a P5 (grayscale netpbm) image
+    ``_IMG_W`` pixels wide, trailing partial row dropped. Returns
+    (height, P5 bytes), or (0, None) when not even one row fits."""
+    import numpy as np
+
+    from city_payroll_data_pipeline_spark.functions import multimodal as mm
+
+    h = len(blob) // _IMG_W
+    if h < 1:
+        return 0, None
+    src = np.frombuffer(blob[: h * _IMG_W], dtype=np.uint8).reshape(h, _IMG_W)
+    return h, mm.encode_ppm(src)
+
+
 def q_media_thumbnail(spark, sf_dir):
     """End-to-end image codec path inside Arrow batches: synthesize a
     P5 (grayscale netpbm) blob per doc from its text bytes, then run
@@ -3612,40 +3656,22 @@ def q_media_thumbnail(spark, sf_dir):
     import pandas as pd
 
     from city_payroll_data_pipeline_spark.functions import multimodal as mm
-    from city_payroll_data_pipeline_spark.session import ship_package
 
-    docs = table(spark, sf_dir, "documents", spread=True)
-    ship_package(docs.sparkSession)
+    def thumbnail(doc_id, blob):
+        h, image = _p5_image(blob)
+        if image is None:
+            return
+        thumb_blob = mm.resize_image_batch(
+            pd.Series([image]), _THUMB_W, _THUMB_H
+        )[0]
+        thumb = mm.decode_image_batch(pd.Series([thumb_blob]))[0]
+        assert thumb.shape == (_THUMB_H, _THUMB_W)
+        yield doc_id, h, int(thumb.sum(dtype=np.int64))
 
-    def op(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                h = len(b) // _IMG_W
-                if h < 1:
-                    continue
-                src = np.frombuffer(
-                    b[: h * _IMG_W], dtype=np.uint8
-                ).reshape(h, _IMG_W)
-                blob = mm.encode_ppm(src)
-                thumb_blob = mm.resize_image_batch(
-                    pd.Series([blob]), _THUMB_W, _THUMB_H
-                )[0]
-                thumb = mm.decode_image_batch(pd.Series([thumb_blob]))[0]
-                assert thumb.shape == (_THUMB_H, _THUMB_W)
-                rows.append(
-                    (int(doc_id), int(h), int(thumb.sum(dtype=np.int64)))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "src_h", "thumb_sum"]
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(op, "media_id bigint, src_h bigint, thumb_sum bigint")
-        .orderBy("media_id")
-    )
+    return _map_documents(
+        spark, sf_dir, thumbnail,
+        "media_id bigint, src_h bigint, thumb_sum bigint",
+    ).orderBy("media_id")
 
 
 # the oracle replays the nearest-neighbor gather: thumbnail pixel
@@ -3692,34 +3718,14 @@ def q_media_phash_pairs(spark, sf_dir):
     dHash is integer index math end to end, so the DuckDB oracle
     replays pixel gather, bit pattern, and block join bit-exactly —
     the driver hash certifies the codec round-trip AND the banding."""
-    import numpy as np
-    import pandas as pd
-
     from city_payroll_data_pipeline_spark.functions import multimodal as mm
-    from city_payroll_data_pipeline_spark.session import ship_package
 
-    docs = table(spark, sf_dir, "documents", spread=True)
-    ship_package(docs.sparkSession)
+    def phash(doc_id, blob):
+        _, image = _p5_image(blob)
+        if image is not None:
+            yield doc_id, int(mm.dhash60(mm.decode_ppm(image)))
 
-    def op(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                h = len(b) // _IMG_W
-                if h < 1:
-                    continue
-                src = np.frombuffer(
-                    b[: h * _IMG_W], dtype=np.uint8
-                ).reshape(h, _IMG_W)
-                blob = mm.encode_ppm(src)
-                ph = mm.dhash60(mm.decode_ppm(blob))
-                rows.append((int(doc_id), int(ph)))
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"])
-
-    hashes = docs.select("doc_id", "text").mapInPandas(
-        op, "doc_id bigint, phash bigint"
-    )
+    hashes = _map_documents(spark, sf_dir, phash, "doc_id bigint, phash bigint")
     return dedup.hamming_near_pairs(
         hashes, "doc_id", "phash", hamming_max=3, n_bits=mm.DHASH_BITS
     ).orderBy("doc_a", "doc_b")
@@ -3780,41 +3786,19 @@ def q_media_audio_energy(spark, sf_dir):
     audio-training pipeline runs before segmentation; one
     ``mapInPandas`` pass, no shuffle, blobs never leave their
     partition, and the all-integer math gives a bit-exact SQL oracle."""
-    import pandas as pd
-
     from city_payroll_data_pipeline_spark.functions import multimodal as mm
-    from city_payroll_data_pipeline_spark.session import ship_package
 
-    docs = table(spark, sf_dir, "documents", spread=True)
-    ship_package(docs.sparkSession)
+    def energy(doc_id, blob):
+        if blob:
+            yield (doc_id,) + mm.audio_frame_stats(blob)
 
-    def op(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if not b:
-                    continue
-                rows.append((int(doc_id),) + mm.audio_frame_stats(b))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "n_frames", "total_energy",
-                    "max_frame_energy", "n_silent_frames", "peak_amp",
-                ],
-            )
-
-    return (
-        docs.filter(F.col("doc_id") % 3 == 1)  # audio-kind convention
-        .select("doc_id", "text")
-        .mapInPandas(
-            op,
-            "media_id bigint, n_samples bigint, n_frames bigint,"
-            " total_energy bigint, max_frame_energy bigint,"
-            " n_silent_frames bigint, peak_amp bigint",
-        )
-        .orderBy("media_id")
-    )
+    return _map_documents(
+        spark, sf_dir, energy,
+        "media_id bigint, n_samples bigint, n_frames bigint,"
+        " total_energy bigint, max_frame_energy bigint,"
+        " n_silent_frames bigint, peak_amp bigint",
+        where=F.col("doc_id") % 3 == 1,  # audio-kind convention
+    ).orderBy("media_id")
 
 
 # oracle replays the framed energy exactly: sample i of media m is
@@ -3878,31 +3862,18 @@ ORDER BY a.media_id
 
 
 def q_media_vad_segments(spark, sf_dir):
-    import pandas as pd
     from pyspark.sql import Window as W
 
     from city_payroll_data_pipeline_spark.functions import multimodal as mm
-    from city_payroll_data_pipeline_spark.session import ship_package
 
-    docs = table(spark, sf_dir, "documents", spread=True)
-    ship_package(docs.sparkSession)
+    def frame_energies(doc_id, blob):
+        for frame, energy in mm.audio_frame_energies(blob):
+            yield doc_id, frame, energy
 
-    def op(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for frame, energy in mm.audio_frame_energies(
-                    text.encode("utf-8")
-                ):
-                    rows.append((int(doc_id), frame, energy))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame", "energy"]
-            )
-
-    frames = (
-        docs.filter(F.col("doc_id") % 3 == 1)  # audio-kind convention
-        .select("doc_id", "text")
-        .mapInPandas(op, "media_id bigint, frame bigint, energy bigint")
+    frames = _map_documents(
+        spark, sf_dir, frame_energies,
+        "media_id bigint, frame bigint, energy bigint",
+        where=F.col("doc_id") % 3 == 1,  # audio-kind convention
     )
     voiced = frames.filter(F.col("energy") >= mm.AUDIO_SILENT_T)
     w = W.partitionBy("media_id").orderBy("frame")

@@ -242,6 +242,71 @@ COSINE_TOPK_SQL = _cosine_topk_sql()
 
 
 # --------------------------------------------------------------------------
+# Recall@K certificate — the one eval every ANN report runs: each
+# approximate arm's top-K is joined to the exact cosine top-K of the
+# same query set, giving one (retriever, matched, total, recall_at_k)
+# row per arm. The exact baseline is the unit an interactive session
+# reuses across reports (Incremental Top-K Similarity Search, EDBT
+# 2020); every join runs on (queries × K)-sized frames, never the
+# corpus.
+#
+# Measured shape (r5, r10): each arm keeps its own join+agg against an
+# un-checkpointed baseline. A union-all-then-one-join rewrite was 45%
+# slower at sf0.1 (the per-arm plans reuse the baseline's exchanges
+# and their small stages schedule in parallel), and an eager
+# checkpoint of the baseline was 24% slower (a serializing barrier
+# where the duplicate subtrees otherwise run as concurrent stages).
+# --------------------------------------------------------------------------
+
+
+def recall_certificate(spark, sf_dir, arms, query_ids=None):
+    """Grade ``arms`` — ``(retriever, top-k DataFrame)`` pairs, taken in
+    order — against the exact top-K; rows ordered by retriever."""
+    exact = q_cosine_topk(spark, sf_dir, query_ids).select(
+        "query_id", "neighbor_id"
+    )
+    total = K * (N_QUERIES if query_ids is None else len(query_ids))
+    out = None
+    for name, topk in arms:
+        part = (
+            topk.select("query_id", "neighbor_id")
+            .join(exact, ["query_id", "neighbor_id"])
+            .agg(
+                F.lit(name).alias("retriever"),
+                F.count("*").alias("matched"),
+                F.lit(total).cast("long").alias("total"),
+                (F.count("*") / F.lit(total)).alias("recall_at_k"),
+            )
+        )
+        out = part if out is None else out.unionByName(part)
+    return out.orderBy("retriever")
+
+
+def recall_certificate_sql(arms, query_ids=None) -> str:
+    """Oracle twin of recall_certificate: ``arms`` are ``(retriever,
+    top-k SQL)`` pairs, each embedded verbatim as one UNION ALL arm."""
+    total = K * (N_QUERIES if query_ids is None else len(query_ids))
+    body = "\nUNION ALL\n".join(
+        f"""
+SELECT '{name}' AS retriever,
+       COUNT(*) AS matched,
+       CAST({total} AS BIGINT) AS total,
+       CAST(COUNT(*) AS DOUBLE) / {total} AS recall_at_k
+FROM ({sql}) ap
+JOIN exact ON ap.query_id = exact.query_id
+          AND ap.neighbor_id = exact.neighbor_id"""
+        for name, sql in arms
+    )
+    return f"""
+WITH exact AS MATERIALIZED (
+  SELECT query_id, neighbor_id FROM ({_cosine_topk_sql(query_ids)})
+)
+{body}
+ORDER BY retriever
+"""
+
+
+# --------------------------------------------------------------------------
 # hard_negative_mining — contrastive-training data prep: for each
 # anchor, ONE positive (the exact nearest neighbor) and a band of
 # HARD negatives (ranks 11–15: similar enough to be informative, far
@@ -565,8 +630,10 @@ def q_ivf_probe_curve(spark, sf_dir):
     )
 
 
-IVF_PROBE_CURVE_SQL = f"""
-WITH qv AS (
+# IVF cell assignment shared verbatim by the probe-curve and IVF-PQ
+# oracles: seed centroids, every vector's cells ranked by cosine
+# (ties → smaller list_id), and each corpus vector's nearest cell.
+_IVF_CELLS_SQL = f"""qv AS (
   SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
   FROM ({_Q_CORPUS_SQL})
 ),
@@ -591,7 +658,11 @@ ranked_cells AS (
                             ORDER BY csim DESC, list_id ASC) AS r
   FROM cell_scored
 ),
-corpus_cells AS (SELECT vec_id, list_id FROM ranked_cells WHERE r = 1),
+corpus_cells AS (SELECT vec_id, list_id FROM ranked_cells WHERE r = 1)"""
+
+
+IVF_PROBE_CURVE_SQL = f"""
+WITH {_IVF_CELLS_SQL},
 cell_sizes AS (
   SELECT list_id, COUNT(*) AS cell_size FROM corpus_cells GROUP BY list_id
 ),
@@ -1675,6 +1746,20 @@ WHERE r = 1
 """
 
 
+# ADC tail of every PQ-family oracle: rank the integer ADC scores of
+# the preceding ``scored`` CTE (ties → smaller neighbor_id) and keep K
+_ADC_TOPK_SQL = f"""ranked AS (
+  SELECT query_id, neighbor_id, adc_dot,
+         ROW_NUMBER() OVER (
+           PARTITION BY query_id
+           ORDER BY adc_dot DESC, neighbor_id) AS rank
+  FROM scored
+)
+SELECT query_id, rank, neighbor_id, adc_dot
+FROM ranked WHERE rank <= {K}
+"""
+
+
 def _pq_ann_topk_sql(query_ids=None) -> str:
     return f"""
 WITH subs AS ({_PQ_SUBS_SQL}),
@@ -1692,16 +1777,7 @@ scored AS (
   WHERE e.vec_id <> l.query_id
   GROUP BY l.query_id, e.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, adc_dot,
-         ROW_NUMBER() OVER (
-           PARTITION BY query_id
-           ORDER BY adc_dot DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, adc_dot
-FROM ranked WHERE rank <= {K}
-"""
+{_ADC_TOPK_SQL}"""
 
 
 PQ_ANN_TOPK_SQL = _pq_ann_topk_sql()
@@ -1797,35 +1873,17 @@ def q_pq_trained_recall(spark, sf_dir):
         corpus, PQ_M, _PQ_DSUB, PQ_KS, PQ_TRAIN_INIT_STRIDE,
         iters=PQ_TRAIN_ITERS, train_stride=PQ_TRAIN_SAMPLE_STRIDE,
     )
-    # NOTE (r10 optimization round, measured): checkpointing this
-    # shared exact baseline LOOKS right (each arm join replays the
-    # brute-force pass; no ReusedExchange fires) but solo-floored 24%
-    # SLOWER (5.9 -> 7.3 s): on an otherwise idle local[32] the
-    # duplicate subtrees run as concurrent stages of one job, while
-    # the eager checkpoint is a serializing barrier. Same conclusion
-    # as the r5 ann_recall_report union-rewrite measurement. Kept as
-    # concurrent duplicates deliberately.
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    total = K * N_QUERIES
     arms = (
         ("pq_lloyd", dict(codebook=cb)),
         ("pq_seed", dict(codebook_stride=PQ_STRIDE)),
     )
-    parts = []
-    for name, kw in arms:
-        ap = sim.pq_topk(
+    return recall_certificate(spark, sf_dir, (
+        (name, sim.pq_topk(
             emb, "vec_id", "embedding", queries,
             k=K, m_sub=PQ_M, k_codes=PQ_KS, dim=DIM, **kw,
-        ).select("query_id", "neighbor_id")
-        parts.append(
-            ap.join(exact, ["query_id", "neighbor_id"]).agg(
-                F.lit(name).alias("retriever"),
-                F.count("*").alias("matched"),
-                F.lit(total).cast("long").alias("total"),
-                (F.count("*") / F.lit(total)).alias("recall_at_k"),
-            )
-        )
-    return parts[0].unionByName(parts[1]).orderBy("retriever")
+        ))
+        for name, kw in arms
+    ))
 
 
 def _d2_sql(sub: str, cq: str) -> str:
@@ -1909,44 +1967,13 @@ scored AS (
   WHERE e.vec_id <> l.query_id
   GROUP BY l.query_id, e.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, adc_dot,
-         ROW_NUMBER() OVER (
-           PARTITION BY query_id
-           ORDER BY adc_dot DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, adc_dot
-FROM ranked WHERE rank <= {K}
-"""
+{_ADC_TOPK_SQL}"""
 
 
-def _pq_trained_recall_sql(query_ids=None) -> str:
-    total = K * (N_QUERIES if query_ids is None else len(query_ids))
-    arms = []
-    for name, sql in (
-        ("pq_lloyd", _pq_trained_topk_sql(query_ids)),
-        ("pq_seed", _pq_ann_topk_sql(query_ids)),
-    ):
-        arms.append(f"""
-SELECT '{name}' AS retriever,
-       COUNT(*) AS matched,
-       CAST({total} AS BIGINT) AS total,
-       CAST(COUNT(*) AS DOUBLE) / {total} AS recall_at_k
-FROM ({sql}) ap
-JOIN exact ON ap.query_id = exact.query_id
-          AND ap.neighbor_id = exact.neighbor_id""")
-    body = "\nUNION ALL\n".join(arms)
-    return f"""
-WITH exact AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM ({_cosine_topk_sql(query_ids)})
-)
-{body}
-ORDER BY retriever
-"""
-
-
-PQ_TRAINED_RECALL_SQL = _pq_trained_recall_sql()
+PQ_TRAINED_RECALL_SQL = recall_certificate_sql((
+    ("pq_lloyd", _pq_trained_topk_sql()),
+    ("pq_seed", _pq_ann_topk_sql()),
+))
 
 
 # --------------------------------------------------------------------------
@@ -1974,10 +2001,6 @@ _IVFRES_ITERS = 10   # Lloyd steps — residuals have no natural seed
 def q_ivfpq_residual_recall(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings", spread=True)
     queries = _query_frame(emb, None)
-    # exact baseline deliberately NOT checkpointed — see the
-    # q_pq_trained_recall measurement note (duplicate subtrees run as
-    # concurrent stages; a checkpoint barrier measured slower)
-    exact = q_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
     # Shared arm derivation (VERDICT r10 item 2): all three arms probe
     # the SAME coarse index, so quantize + seed centroids + nearest-cell
     # assignment are derived ONCE and fed to each arm — at corpus scale
@@ -1990,11 +2013,10 @@ def q_ivfpq_residual_recall(spark, sf_dir):
     assigned = sim.ivf_assign(corpus_q, cents, 1).localCheckpoint(
         eager=False
     )
-    total = K * N_QUERIES
-    arms = (
+    return recall_certificate(spark, sf_dir, (
         (
             "ivf_exact_probe",
-            lambda: sim.ivf_topk(
+            sim.ivf_topk(
                 emb, "vec_id", "embedding", queries,
                 k=K, n_lists=N_LISTS, n_probe=N_PROBE,
                 centroid_stride=CENTROID_STRIDE,
@@ -2006,7 +2028,7 @@ def q_ivfpq_residual_recall(spark, sf_dir):
             # incumbent), with the shared index frames swapped in —
             # the codebook/encode/LUT shape and output are identical
             "ivfpq_raw",
-            lambda: sim.ivfpq_topk(
+            sim.ivfpq_topk(
                 emb, "vec_id", "embedding", queries,
                 k=K, n_lists=N_LISTS, n_probe=N_PROBE,
                 centroid_stride=CENTROID_STRIDE,
@@ -2017,7 +2039,7 @@ def q_ivfpq_residual_recall(spark, sf_dir):
         ),
         (
             "ivfpq_residual",
-            lambda: sim.ivfpq_residual_topk(
+            sim.ivfpq_residual_topk(
                 emb, "vec_id", "embedding", queries,
                 k=K, n_lists=N_LISTS, n_probe=N_PROBE,
                 centroid_stride=CENTROID_STRIDE,
@@ -2027,22 +2049,7 @@ def q_ivfpq_residual_recall(spark, sf_dir):
                 cents=cents, corpus_assigned=assigned,
             ),
         ),
-    )
-    parts = []
-    for name, fn in arms:
-        ap = fn().select("query_id", "neighbor_id")
-        parts.append(
-            ap.join(exact, ["query_id", "neighbor_id"]).agg(
-                F.lit(name).alias("retriever"),
-                F.count("*").alias("matched"),
-                F.lit(total).cast("long").alias("total"),
-                (F.count("*") / F.lit(total)).alias("recall_at_k"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("retriever")
+    ))
 
 
 def _ivfpq_residual_topk_sql(query_ids=None) -> str:
@@ -2126,42 +2133,7 @@ scored AS (
   JOIN lut l ON l.query_id = qc.query_id AND l.m = e.m AND l.cw = e.cw
   GROUP BY qc.query_id, e.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, adc_dot,
-         ROW_NUMBER() OVER (
-           PARTITION BY query_id
-           ORDER BY adc_dot DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, adc_dot
-FROM ranked WHERE rank <= {K}
-"""
-
-
-def _ivfpq_residual_recall_sql(query_ids=None) -> str:
-    total = K * (N_QUERIES if query_ids is None else len(query_ids))
-    arms = []
-    for name, sql in (
-        ("ivf_exact_probe", _ivf_ann_topk_sql(query_ids)),
-        ("ivfpq_raw", _ivfpq_sql(query_ids)),
-        ("ivfpq_residual", _ivfpq_residual_topk_sql(query_ids)),
-    ):
-        arms.append(f"""
-SELECT '{name}' AS retriever,
-       COUNT(*) AS matched,
-       CAST({total} AS BIGINT) AS total,
-       CAST(COUNT(*) AS DOUBLE) / {total} AS recall_at_k
-FROM ({sql}) ap
-JOIN exact ON ap.query_id = exact.query_id
-          AND ap.neighbor_id = exact.neighbor_id""")
-    body = "\nUNION ALL\n".join(arms)
-    return f"""
-WITH exact AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM ({_cosine_topk_sql(query_ids)})
-)
-{body}
-ORDER BY retriever
-"""
+{_ADC_TOPK_SQL}"""
 
 
 #: IVF-PQ codewords come from stride-13 seeds so they differ from the
@@ -2197,52 +2169,15 @@ SELECT CAST(vec_id / {_IVFPQ_STRIDE} AS INT) AS cw, m, sub AS cq
 FROM subs
 WHERE vec_id % {_IVFPQ_STRIDE} = 0 AND vec_id < {_IVFPQ_STRIDE * _IVFPQ_KS}
 """
-    enc = f"""
-SELECT vec_id, m, cw FROM (
-  SELECT s.vec_id, s.m, c.cw,
-         ROW_NUMBER() OVER (
-           PARTITION BY s.vec_id, s.m
-           ORDER BY {_dot_sql('s.sub', 's.sub')}
-                    - 2 * {_dot_sql('s.sub', 'c.cq')}
-                    + {_dot_sql('c.cq', 'c.cq')},
-                    c.cw) AS r
-  FROM subs s JOIN cb c ON s.m = c.m)
-WHERE r = 1
-"""
     return f"""
-WITH qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
-cents AS (
-  SELECT CAST(vec_id // {CENTROID_STRIDE} AS INT) AS list_id,
-         q AS cq, n2 AS cn2
-  FROM qv
-  WHERE vec_id % {CENTROID_STRIDE} = 0
-    AND vec_id < {CENTROID_STRIDE * N_LISTS}
-),
-cell_scored AS (
-  SELECT v.vec_id, c.list_id,
-         CASE WHEN sqrt(CAST(v.n2 AS DOUBLE) * CAST(c.cn2 AS DOUBLE)) > 0
-              THEN CAST({_dot_sql('v.q', 'c.cq')} AS DOUBLE)
-                   / sqrt(CAST(v.n2 AS DOUBLE) * CAST(c.cn2 AS DOUBLE))
-         END AS csim
-  FROM qv v CROSS JOIN cents c
-),
-ranked_cells AS (
-  SELECT vec_id, list_id,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY csim DESC, list_id ASC) AS r
-  FROM cell_scored
-),
-corpus_cells AS (SELECT vec_id, list_id FROM ranked_cells WHERE r = 1),
+WITH {_IVF_CELLS_SQL},
 qry_cells AS (
   SELECT vec_id AS query_id, list_id FROM ranked_cells
   WHERE r <= {N_PROBE} AND {_qpred(query_ids)}
 ),
 subs AS ({subs}),
 cb AS ({cb}),
-enc AS ({enc}),
+enc AS ({_PQ_ENC_SQL}),
 lut AS (
   SELECT s.vec_id AS query_id, s.m, c.cw, {_dot_sql('s.sub', 'c.cq')} AS dotv
   FROM subs s JOIN cb c ON s.m = c.m
@@ -2257,23 +2192,18 @@ scored AS (
   JOIN lut l ON l.query_id = qc.query_id AND l.m = e.m AND l.cw = e.cw
   GROUP BY qc.query_id, e.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, adc_dot,
-         ROW_NUMBER() OVER (
-           PARTITION BY query_id
-           ORDER BY adc_dot DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, adc_dot
-FROM ranked WHERE rank <= {K}
-"""
+{_ADC_TOPK_SQL}"""
 
 
 IVFPQ_ANN_TOPK_SQL = _ivfpq_sql()
 
 # assigned here (not at the builder definition): the residual-recall
 # oracle embeds _ivfpq_sql for its incumbent arm
-IVFPQ_RESIDUAL_RECALL_SQL = _ivfpq_residual_recall_sql()
+IVFPQ_RESIDUAL_RECALL_SQL = recall_certificate_sql((
+    ("ivf_exact_probe", _ivf_ann_topk_sql()),
+    ("ivfpq_raw", _ivfpq_sql()),
+    ("ivfpq_residual", _ivfpq_residual_topk_sql()),
+))
 
 
 def q_pq_code_balance(spark, sf_dir):
@@ -2306,24 +2236,10 @@ def q_pq_recall_report(spark, sf_dir, query_ids=None):
     (PQ, IVF-PQ) against the exact baseline — the ann_recall_report
     pattern extended to the r6 additions, so one driver hash certifies
     retrievers AND eval. Joins run on (queries × K)-sized frames."""
-    # exact baseline deliberately NOT checkpointed — see the
-    # q_pq_trained_recall measurement note
-    exact = q_cosine_topk(spark, sf_dir, query_ids).select(
-        "query_id", "neighbor_id"
-    )
-    total = K * (N_QUERIES if query_ids is None else len(query_ids))
-    parts = []
-    for name, fn in (("pq", q_pq_ann_topk), ("ivfpq", q_ivfpq_ann_topk)):
-        ap = fn(spark, sf_dir, query_ids).select("query_id", "neighbor_id")
-        parts.append(
-            ap.join(exact, ["query_id", "neighbor_id"]).agg(
-                F.lit(name).alias("retriever"),
-                F.count("*").alias("matched"),
-                F.lit(total).cast("long").alias("total"),
-                (F.count("*") / F.lit(total)).alias("recall_at_k"),
-            )
-        )
-    return parts[0].unionByName(parts[1]).orderBy("retriever")
+    return recall_certificate(spark, sf_dir, (
+        (name, fn(spark, sf_dir, query_ids))
+        for name, fn in (("pq", q_pq_ann_topk), ("ivfpq", q_ivfpq_ann_topk))
+    ), query_ids)
 
 
 def q_pq_recall_report_sampled(spark, sf_dir):
@@ -2337,28 +2253,10 @@ def q_pq_recall_report_sampled(spark, sf_dir):
 
 
 def _pq_recall_report_sql(query_ids=None) -> str:
-    total = K * (N_QUERIES if query_ids is None else len(query_ids))
-    arms = []
-    for name, sql in (
+    return recall_certificate_sql((
         ("pq", _pq_ann_topk_sql(query_ids)),
         ("ivfpq", _ivfpq_sql(query_ids)),
-    ):
-        arms.append(f"""
-SELECT '{name}' AS retriever,
-       COUNT(*) AS matched,
-       CAST({total} AS BIGINT) AS total,
-       CAST(COUNT(*) AS DOUBLE) / {total} AS recall_at_k
-FROM ({sql}) ap
-JOIN exact ON ap.query_id = exact.query_id
-          AND ap.neighbor_id = exact.neighbor_id""")
-    body = "\nUNION ALL\n".join(arms)
-    return f"""
-WITH exact AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM ({_cosine_topk_sql(query_ids)})
-)
-{body}
-ORDER BY retriever
-"""
+    ), query_ids)
 
 
 def q_pq_distortion_report(spark, sf_dir):

@@ -390,3 +390,58 @@ def test_sql_concurrent_tenants_no_view_race(engine, spark, tmp_path_factory):
     for t in threads:
         t.join()
     assert not errors, errors
+
+
+def _write_csv(path, header, rows):
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(header)
+        w.writerows(rows)
+    return str(path)
+
+
+_CANONICAL_ROW = {
+    "corporate": ["1", "2013", "Police", "Officer", "FT", "$100.00", "$90.00", "", ""],
+    "education": ["Doe", "Jane", "D1", "S1", "Teacher", "1.0", "5", "A", "50000"],
+    "hospital": ["Cedars-Sinai", "Los Angeles", "CA", "470 - JOINT", "2", "100.5", "90.0"],
+}
+
+
+@pytest.mark.parametrize("industry", sorted(_CANONICAL_ROW))
+def test_ingest_accepts_canonical_header(spark, tmp_path, industry):
+    """Each industry's canonical header (hospital's space-padded names
+    included) passes the reader's header check."""
+    from city_payroll_data_pipeline_spark.engine import RAW_COLUMNS, Engine
+
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.registry.register("T", industry, "pw")
+    path = _write_csv(
+        tmp_path / f"{industry}_upload.csv",
+        RAW_COLUMNS[industry],
+        [_CANONICAL_ROW[industry]],
+    )
+    eng.ingest("T", "pw", path)
+    assert eng.fact_table("T", "pw", path).count() == 1
+
+
+@pytest.mark.parametrize("case", ["swapped", "missing"])
+def test_ingest_rejects_nonconforming_header(spark, tmp_path, case):
+    """A header that does not name the industry's columns in order must
+    fail the ingest, not shift values into the wrong fields: with
+    `Overtime Pay` before `Base Pay`, the row below would otherwise land
+    as base 90 / overtime 100 and read as 'High Overtime'."""
+    from city_payroll_data_pipeline_spark.engine import Engine
+    from city_payroll_data_pipeline_spark.schemas import CORPORATE_RAW_COLUMNS
+
+    header = list(CORPORATE_RAW_COLUMNS)
+    row = ["1", "2013", "Police", "Officer", "FT", "$90.00", "$100.00", "", ""]
+    i, j = header.index("Overtime Pay"), header.index("Base Pay")
+    if case == "swapped":
+        header[i], header[j] = header[j], header[i]
+    else:
+        del header[i], row[i]
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.registry.register("T", "corporate", "pw")
+    path = _write_csv(tmp_path / "corporate_upload.csv", header, [row])
+    with pytest.raises(Exception, match="CSV header does not conform"):
+        eng.ingest("T", "pw", path)

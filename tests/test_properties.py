@@ -942,6 +942,23 @@ def test_pagerank_collected_matches_distributed(spark, raw_edges, seed):
             pagerank_scaled(edges, iters=1, collect_bound=len(w) - 1)
 
 
+def test_pagerank_collected_rejects_zero_out_weight(spark):
+    """A source whose edges sum to weight 0 is outside pagerank_scaled's
+    positive-weight contract: the driver fast path must say so, not
+    die in a ZeroDivisionError (hits_scaled's zero-total precedent)."""
+    import pytest as _pytest
+
+    from city_payroll_data_pipeline_spark.operators.graph import (
+        pagerank_scaled,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2, 3), (2, 3, 0), (3, 1, 1)], "src long, dst long, weight long"
+    )
+    with _pytest.raises(ValueError, match="zero total out-weight"):
+        pagerank_scaled(edges, iters=2, collect_bound=100)
+
+
 @settings(max_examples=10, deadline=None)
 @given(
     st.lists(

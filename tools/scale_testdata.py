@@ -55,6 +55,18 @@ def main() -> None:
     import duckdb
 
     con = duckdb.connect()
+    # replicas stay disjoint only while every shifted key is below OFF
+    for t, keys in KEYS.items():
+        maxes = con.execute(
+            f"SELECT {', '.join(f'max({k})' for k in keys)} "
+            f"FROM read_parquet('{src}/{t}.parquet')"
+        ).fetchone()
+        for k, m in zip(keys, maxes):
+            if m is not None and m >= OFF:
+                raise SystemExit(
+                    f"{t}.{k}: max key {m} >= OFF={OFF}; replica key "
+                    "ranges would overlap — raise OFF"
+                )
     for t in COPY_ONCE:
         con.execute(
             f"COPY (SELECT * FROM read_parquet('{src}/{t}.parquet')) "
