@@ -30,7 +30,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -459,6 +461,10 @@ EXCLUDED = {
 
 
 def _setup():
+    """The bench session, and ``run_once(name, group)``: build and run
+    one registry query to the noop sink (full computation, no driver
+    collect) with its jobs in Spark job group ``group``, returning
+    wall seconds."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # one optional dot only: a greedy [0-9.]+ would capture '0.1.' from
     # a dir like sf0.1.v2 and crash float() before any query runs
@@ -469,41 +475,132 @@ def _setup():
     from city_payroll_data_pipeline_spark.suite import build_suite
 
     spark = get_spark(app_name="bench")
+    # The driver keeps only a bounded tail of this process's output; the
+    # 26 intentionally-bounded unpartitioned windows each emit a
+    # `WindowExec: No Partition Defined` WARN that at 168 queries fills
+    # that buffer wall-to-wall and can squeeze out the one JSON line
+    # that matters (the round-3 failure mode). Errors still surface.
     spark.sparkContext.setLogLevel("ERROR")
-    return spark, build_suite(), sf_dir, sf
+    suite = build_suite()
 
-
-def solo(names: list[str], runs: int = 4, append: bool = False) -> None:
-    """The 4-warm-solo re-floor protocol (VERDICT r7 item 6), as a
-    tool instead of a manual ritual: per query, one warmup pass plus
-    ``runs`` timed solo executions in a fresh session; prints one JSON
-    line and (with ``--append``) appends the floors to SCALE.md's
-    re-floor ledger for the named-cause analysis to land beside.
-    Per the noise protocol, a cross-round delta is REAL only when this
-    floor moves or the plan changes — bench-pass numbers never are."""
-    spark, suite, sf_dir, sf = _setup()
-
-    def run_once(name: str) -> float:
+    def run_once(name: str, group: str | None = None) -> float:
+        spark.sparkContext.setJobGroup(group or name, group or name)
         t0 = time.perf_counter()
         suite[name].spark(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         return time.perf_counter() - t0
 
-    run_once("preview_limit")  # session/codegen spin-up
-    # Protocol caveat (round-10 finding, SCALE.md "Round-10 re-floor"):
-    # floors are stable WITHIN a session but can spread ±25% ACROSS
-    # sessions on an unchanged plan and seed-identical data (a global
-    # pre-warm pass was tried and did not remove the spread — it was
-    # reverted). Treat a cross-round floor delta as real only when it
-    # exceeds that session spread or the plan changed.
+    return spark, run_once, sf
+
+
+def _enable_event_log(log_dir: str) -> None:
+    """Make the session get_spark starts next write a plain-text Spark
+    event log to ``log_dir``. Submit arguments already set in
+    PYSPARK_SUBMIT_ARGS are kept."""
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "").strip()
+    confs = {"enabled": "true", "dir": f"file://{log_dir}",
+             "compress": "false", "rolling.enabled": "false"}
+    args = args.removesuffix("pyspark-shell") + "".join(
+        f" --conf spark.eventLog.{k}={v}" for k, v in confs.items()
+    )
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"{args} pyspark-shell".strip()
+
+
+def _read_event_log(log_dir: str) -> dict[str, dict]:
+    """Job group -> its job count and the Stage Info of each stage it
+    completed. A stage belongs to the group of the first job that
+    lists it."""
+    stage_group: dict[int, str] = {}
+    groups: dict[str, dict] = {}
+    for fname in os.listdir(log_dir):
+        with open(os.path.join(log_dir, fname), encoding="utf-8") as fh:
+            for line in fh:
+                if line.startswith('{"Event":"SparkListenerJobStart"'):
+                    e = json.loads(line)
+                    group = (e.get("Properties") or {}).get("spark.jobGroup.id")
+                    rec = groups.setdefault(group, {"jobs": 0, "stages": []})
+                    rec["jobs"] += 1
+                    for sid in e["Stage IDs"]:
+                        stage_group.setdefault(sid, group)
+                elif line.startswith('{"Event":"SparkListenerStageCompleted"'):
+                    info = json.loads(line)["Stage Info"]
+                    groups[stage_group[info["Stage ID"]]]["stages"].append(info)
+    return groups
+
+
+def _stage_profile(stages: list[dict]) -> dict:
+    """Executor-side totals over ``stages`` and the 5 stages with the
+    longest wall time, from the stages' accumulated task metrics."""
+    rows = []
+    for s in stages:
+        m = {
+            a["Name"].removeprefix("internal.metrics."): a.get("Value", 0)
+            for a in s.get("Accumulables", [])
+        }
+        rows.append({
+            "stage": s["Stage ID"],
+            "name": s.get("Stage Name", "")[:60],
+            "wall_s": (s["Completion Time"] - s["Submission Time"]) / 1e3,
+            "tasks": s["Number of Tasks"],
+            "executor_run_s": round(m.get("executorRunTime", 0) / 1e3, 3),
+            "executor_cpu_s": round(m.get("executorCpuTime", 0) / 1e9, 3),
+            "shuffle_read_bytes": m.get("shuffle.read.remoteBytesRead", 0)
+            + m.get("shuffle.read.localBytesRead", 0),
+            "shuffle_write_bytes": m.get("shuffle.write.bytesWritten", 0),
+            "input_bytes": m.get("input.bytesRead", 0),
+        })
+    rows.sort(key=lambda r: -r["wall_s"])
+    totals = {
+        k: round(sum(r[k] for r in rows), 3)
+        for k in ("tasks", "executor_run_s", "executor_cpu_s",
+                  "shuffle_read_bytes", "shuffle_write_bytes", "input_bytes")
+    }
+    return {"stages": len(rows), **totals, "top_stages": rows[:5]}
+
+
+def solo(names: list[str], runs: int = 4, append: bool = False) -> None:
+    """The 4-warm-solo re-floor protocol (VERDICT r7 item 6) and the
+    per-query profiler: per query, one warmup pass plus ``runs`` timed
+    solo executions, each run its own job group ``name/i`` (0 is the
+    warmup). Prints one JSON line with each query's runs, floor, jobs
+    per run and the floor run's stage breakdown, read from the Spark
+    event log; with ``--append`` the floors also go to SCALE.md's
+    re-floor ledger. Per the noise protocol, a cross-round delta is
+    REAL only when this floor moves or the plan changes — bench-pass
+    numbers never are."""
+    log_dir = tempfile.mkdtemp(prefix="bench-eventlog-")
+    try:
+        _enable_event_log(log_dir)
+        spark, run_once, sf = _setup()
+        run_once("preview_limit")  # session/codegen spin-up
+        # Protocol caveat (round-10 finding, SCALE.md "Round-10 re-floor"):
+        # floors are stable WITHIN a session but can spread ±25% ACROSS
+        # sessions on an unchanged plan and seed-identical data (a global
+        # pre-warm pass was tried and did not remove the spread — it was
+        # reverted). Treat a cross-round floor delta as real only when it
+        # exceeds that session spread or the plan changed.
+        times = {}
+        for name in names:
+            run_once(name, f"{name}/0")  # per-query warmup: listing + codegen
+            times[name] = [
+                round(run_once(name, f"{name}/{i}"), 3)
+                for i in range(1, runs + 1)
+            ]
+        spark.stop()  # flushes and closes the event log
+        groups = _read_event_log(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
     results = {}
-    for name in names:
-        run_once(name)  # per-query warmup: file listing + codegen
-        times = [round(run_once(name), 3) for _ in range(runs)]
-        results[name] = {"runs": times, "floor": min(times)}
-    line = {"mode": "solo", "sf": sf, "results": results}
-    print(json.dumps(line))
+    for name, ts in times.items():
+        floor_group = f"{name}/{ts.index(min(ts)) + 1}"
+        results[name] = {
+            "runs": ts,
+            "floor": min(ts),
+            "jobs": [groups[f"{name}/{i}"]["jobs"] for i in range(runs + 1)],
+            **_stage_profile(groups[floor_group]["stages"]),
+        }
+    print(json.dumps({"mode": "solo", "sf": sf, "results": results}))
     if append:
         ledger = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "SCALE.md"
@@ -552,28 +649,7 @@ def main() -> None:
         names = [a for a in args if a != "--append"]
         solo(names, append=append)
         return
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    from city_payroll_data_pipeline_spark.session import get_spark
-    from city_payroll_data_pipeline_spark.suite import build_suite
-
-    spark = get_spark(app_name="bench")
-    # The driver keeps only a bounded tail of this process's output; the
-    # 26 intentionally-bounded unpartitioned windows each emit a
-    # `WindowExec: No Partition Defined` WARN that at 168 queries fills
-    # that buffer wall-to-wall and can squeeze out the one JSON line
-    # that matters (the round-3 failure mode). Errors still surface.
-    spark.sparkContext.setLogLevel("ERROR")
-    suite = build_suite()
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        suite[name].spark(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
+    _, run_once, sf = _setup()
 
     try:
         run_once("preview_limit")  # warmup: session/codegen spin-up

@@ -2480,8 +2480,10 @@ def q_session_coverage(spark, sf_dir):
     )
 
 
-SESSION_COVERAGE_SQL = """
-WITH secs AS (
+# The oracle twin of _session_spans: sessionize events (3600 s gap),
+# collapse to per-(user, session) [t0, t1] spans and emit the per-tick
+# net deltas. Both sweep oracles start with it.
+_SESSION_SPANS_SQL = """secs AS (
   SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS s
   FROM events
 ),
@@ -2511,7 +2513,11 @@ deltas AS (
   UNION ALL
   SELECT t1 + 1 AS t, -1 AS d FROM sessions
 ),
-ticks AS (SELECT t, SUM(d) AS net FROM deltas GROUP BY t),
+ticks AS (SELECT t, SUM(d) AS net FROM deltas GROUP BY t)"""
+
+
+SESSION_COVERAGE_SQL = f"""
+WITH {_SESSION_SPANS_SQL},
 live AS (
   SELECT t,
          CAST(SUM(net) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
@@ -2535,38 +2541,8 @@ FROM totals, covered
 """
 
 
-PEAK_CONCURRENCY_SQL = """
-WITH secs AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS s
-  FROM events
-),
-flagged AS (
-  SELECT user_id, s, event_id,
-         CASE WHEN lag(s) OVER w IS NULL OR s - lag(s) OVER w > 3600
-              THEN 1 ELSE 0 END AS new_session
-  FROM secs
-  WINDOW w AS (PARTITION BY user_id ORDER BY s, event_id)
-),
-numbered AS (
-  -- event_id tie-break matches Spark's assign_sessions window: an
-  -- ORDER BY s alone leaves same-second rows in nondeterministic
-  -- order, so a new_session=1 row could enumerate after its same-
-  -- second sibling and attach that sibling to the PREVIOUS session
-  SELECT user_id, s,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY s, event_id
-                                ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-),
-sessions AS (
-  SELECT user_id, session_id, MIN(s) AS t0, MAX(s) AS t1
-  FROM numbered GROUP BY 1, 2
-),
-deltas AS (
-  SELECT t0 AS t, 1 AS d FROM sessions
-  UNION ALL
-  SELECT t1 + 1 AS t, -1 AS d FROM sessions
-),
-ticks AS (SELECT t, SUM(d) AS net FROM deltas GROUP BY t),
+PEAK_CONCURRENCY_SQL = f"""
+WITH {_SESSION_SPANS_SQL},
 live AS (
   SELECT t, CAST(SUM(net) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
                  AS BIGINT) AS active

@@ -45,7 +45,13 @@ def _reference_query(industry: str, csv_path: str) -> str:
     def load(prefix: str) -> str:
         # the education fact file is misnamed fct_corporate.sql in the
         # reference tree — match on the prefix, not the full name
-        (path,) = glob.glob(f"{REF_MODELS}/{industry}/{prefix}_*.sql")
+        pattern = f"{REF_MODELS}/{industry}/{prefix}_*.sql"
+        paths = glob.glob(pattern)
+        assert len(paths) == 1, (
+            f"reference model tree REF_MODELS={REF_MODELS!r} missing or "
+            f"incomplete: glob {pattern!r} matched {paths}"
+        )
+        (path,) = paths
         txt = open(path).read()
         txt = re.sub(r"MODEL\s*\(.*?\);", "", txt, flags=re.S)
         txt = txt.replace("@client_raw_path", f"'{csv_path}'")

@@ -56,3 +56,28 @@ def test_bench_emits_one_json_line():
         detail = json.load(fh)
     assert len(detail["queries"]) == payload["n_queries"]
     assert not detail.get("errors"), detail.get("errors")
+
+
+def test_bench_solo_profiles_each_run(tmp_path):
+    """`bench.py --solo` reports, per query, the job count of every run
+    (warmup first) and the floor run's stage breakdown, read from a
+    Spark event log that it deletes afterwards."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_SMOKE, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py"), "--solo",
+         "budget_report"],
+        capture_output=True, text=True, env=env, timeout=300, check=True,
+    ).stdout.strip().splitlines()
+    r = json.loads(out[-1])["results"]["budget_report"]
+    assert len(r["jobs"]) == 5, r["jobs"]
+    assert len(set(r["jobs"][1:])) == 1, r["jobs"]
+    assert r["floor"] == min(r["runs"])
+    assert r["stages"] >= len(r["top_stages"]) > 0
+    assert sum(s["tasks"] for s in r["top_stages"]) <= r["tasks"]
+    assert not list(tmp_path.glob("bench-eventlog-*"))
