@@ -31,8 +31,19 @@ def budget_aggregate(fct: DataFrame) -> DataFrame:
 
 def budget_report(fct: DataFrame) -> DataFrame:
     """THE report query (serve_flight.py:295): budget_aggregate,
-    costliest first."""
-    return budget_aggregate(fct).orderBy(F.desc("total_budget"))
+    costliest first (nulls last, as ``orderBy(F.desc(...))``).
+
+    The report has one row per distinct job_title, a few hundred at
+    most, and one client reads all of it, so the final sort runs in a
+    single task: ``coalesce(1)`` then a sort within that one partition
+    is the same total order as a global ``orderBy``, without its
+    range-partition sampling job and range exchange. ``full_export``,
+    whose output grows with the upload, keeps the global sort."""
+    return (
+        budget_aggregate(fct)
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("total_budget"))
+    )
 
 
 def full_export(fct: DataFrame) -> DataFrame:

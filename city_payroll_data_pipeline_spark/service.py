@@ -6,9 +6,9 @@ serve_flight.py:21 ``class BusinessSolutionServer(flight.FlightServerBase)``):
 the two report queries (serve_flight.py:234,291,295), and ``do_action``
 lists tenant files (serve_flight.py:337). This module reproduces that
 wire surface as a THIN adapter over :class:`engine.Engine` — transport
-only; every query executes in Spark, and results stream back as Arrow
-record batches read sequentially from an executor-written parquet
-spool (columnar end to end, driver holds at most one batch).
+only; every query executes in Spark, and results stream back as a
+partition-at-a-time Arrow stream of the executors' record batches
+(columnar end to end; the driver holds at most two partitions).
 
 Scale note: Flight is a single-node ingress/egress door, fine for
 reports (small) and per-tenant uploads (bounded). Bulk data belongs on
@@ -22,6 +22,7 @@ import json
 import os
 
 import pyarrow as pa
+import pyarrow.csv as pa_csv
 import pyarrow.flight as flight
 from pyspark.errors import AnalysisException
 
@@ -30,67 +31,46 @@ from city_payroll_data_pipeline_spark.sources.tenancy import AuthError
 
 
 def egress_batches(df):
-    """Memory-bounded egress: the executors write ``df`` to parquet
-    (distributed — the driver never materializes the result), then the
-    part files are replayed ONE record batch at a time in filename
-    order. A sorted result is range-partitioned by its sort, so
-    part-file name order IS global order; peak driver memory is one
-    record batch regardless of result size (the round-3 ``toPandas()``
-    path would OOM the driver on a 100 TB full_export).
+    """Memory-bounded egress: a partition-at-a-time Arrow stream. The
+    executors encode each result partition as Arrow record batches
+    (``toArrowBatchRdd``), and ``PythonRDD.toLocalIteratorAndServe``
+    serves one partition per job with the next one prefetched, so the
+    driver holds at most two partitions, never the whole result.
+    Partitions arrive in index order, and a sorted result is
+    range-partitioned by its sort, so the stream is in global order.
 
-    Returns ``(schema, batch_iterator)``. The spool directory is
-    deleted when the iterator is exhausted or closed; an atexit hook
-    is the fallback for streams a client abandons mid-flight (the
-    generator's ``finally`` never runs then — ADVICE r4)."""
-    import atexit
-    import glob
-    import shutil
-    import tempfile
+    Returns ``(schema, batch_iterator)``. Time-zoned timestamps go out
+    as naive ``timestamp[ns]`` (UTC), the wire type clients are pinned
+    to. Closing the iterator stops the JVM side. The entry points
+    (``_jdf.toArrowBatchRdd``, ``PythonRDD``, ``pyspark.util.
+    _local_iterator_from_socket``) are private Spark API;
+    tests/test_service.py fails loudly if an upgrade moves them."""
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.util import _local_iterator_from_socket
 
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="flight_egress_")
-
-    # A per-spool closure (NOT a bare shutil.rmtree registration): the
-    # normal completion path unregisters it, and atexit.unregister
-    # removes every registration of the given function object — a
-    # shared callee would cancel the fallback of other in-flight
-    # spools. Without the unregister, a long-lived server would grow
-    # one stale registry entry per completed export.
-    def _sweep_spool(path=tmp):
-        shutil.rmtree(path, ignore_errors=True)
-
-    atexit.register(_sweep_spool)
-    out = os.path.join(tmp, "result")
-    df.write.mode("overwrite").parquet(out)
-    # Sort by the PARSED task index, not lexicographically: Spark pads
-    # part numbers to 5 digits only, so beyond 99,999 output files
-    # 'part-100000-…' would sort before 'part-99999-…' and corrupt the
-    # claimed global order of a sorted export (ADVICE r4).
-    files = sorted(
-        glob.glob(os.path.join(out, "part-*")),
-        key=lambda f: int(os.path.basename(f).split("-")[1]),
+    session = df.sparkSession
+    schema = to_arrow_schema(
+        df.schema, prefers_large_types=session._jconf.arrowUseLargeVarTypes()
     )
-    if not files:  # defensive: Spark writes ≥1 part even when empty
-        table = pa.Table.from_pandas(
-            df.limit(0).toPandas(), preserve_index=False
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.unregister(_sweep_spool)
-        return table.schema, iter(table.to_batches())
+    wire = pa.schema(
+        f.with_type(pa.timestamp("ns"))
+        if pa.types.is_timestamp(f.type) and f.type.tz is not None else f
+        for f in schema
+    )
+    sock_info = session.sparkContext._jvm.PythonRDD.toLocalIteratorAndServe(
+        df._jdf.toArrowBatchRdd(), True
+    )
+    frames = _local_iterator_from_socket(sock_info, NoOpSerializer())
 
     def batches():
         try:
-            for f in files:
-                with pq.ParquetFile(f) as pf:
-                    # iter_batches is strictly sequential (unlike
-                    # multi-threaded dataset scans) — preserves order
-                    yield from pf.iter_batches()
+            for buf in frames:
+                yield pa.ipc.read_record_batch(buf, schema).cast(wire)
         finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            atexit.unregister(_sweep_spool)
+            frames.close()  # frees the iterable; its __del__ stops the JVM side
 
-    return pq.ParquetFile(files[0]).schema_arrow, batches()
+    return wire, batches()
 
 
 class PayrollFlightServer(flight.FlightServerBase):
@@ -110,13 +90,12 @@ class PayrollFlightServer(flight.FlightServerBase):
         filename = os.path.basename(meta["filename"])
 
         table = reader.read_all()  # bulk transfer, like reference :148
-        tenant = self.engine.registry.authenticate(client_id, password)
+        self.engine.registry.authenticate(client_id, password)
         self.engine.registry.validate_filename(client_id, filename)
         raw_dir = self.engine.registry.storage_path(client_id, "Raw")
         os.makedirs(raw_dir, exist_ok=True)
         raw_path = os.path.join(raw_dir, filename)
-        table.to_pandas().to_csv(raw_path, index=False)
-        del tenant
+        pa_csv.write_csv(table, raw_path)
         self.engine.ingest(client_id, password, raw_path)
 
     # -- reports (reference serve_flight.py:234-330) ------------------

@@ -81,6 +81,27 @@ def test_budget_report_prunes_unused_columns(suite, spark):
         assert col not in read, read
 
 
+def test_tenant_budget_report_sorts_in_one_task(spark):
+    """operators.reports.budget_report sorts its few hundred rows in one
+    task: no range-partition exchange (and no sampling job), and the
+    same total order as a global sort, a null total_budget last."""
+    from pyspark.sql import functions as F
+
+    from city_payroll_data_pipeline_spark.operators import reports
+
+    fct = spark.createDataFrame(
+        [("Officer", 100.0), ("Officer", 220.0), ("Captain", 390.0),
+         ("Clerk", 40.0), ("Vacant", None), ("Chief", 500.0)],
+        "job_title string, total_amount double",
+    ).repartition(4)
+    report = reports.budget_report(fct)
+    assert "rangepartitioning" not in plan(report).lower()
+    want = reports.budget_aggregate(fct).orderBy(F.desc("total_budget")).collect()
+    got = report.collect()
+    assert got == want
+    assert got[-1]["job_title"] == "Vacant" and got[-1]["total_budget"] is None
+
+
 def test_full_export_plan_is_sorted_scan(suite, spark):
     """full_export is a projection + global sort: no aggregation, no
     Python evaluation, vectorized scan (this test previously audited

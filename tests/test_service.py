@@ -114,8 +114,8 @@ def test_report_error_mapping_friendly(spark, tmp_path):
 
 
 def test_stream_result_preserves_order_across_part_files(spark):
-    """_stream_result egresses from a multi-part sorted parquet spool —
-    the batch stream must replay the GLOBAL sort order (part-file name
+    """_stream_result egresses a multi-partition sorted result — the
+    batch stream must replay the GLOBAL sort order (partition index
     order == range-partition order) and never hold the full result."""
     from city_payroll_data_pipeline_spark.service import egress_batches
 
@@ -132,70 +132,187 @@ def test_stream_result_preserves_order_across_part_files(spark):
     assert sum(b.num_rows for b in empty_iter) == 0
 
 
-def test_egress_part_order_is_numeric_not_lexicographic():
-    """ADVICE r4 regression: Spark pads part indexes to 5 digits, so
-    past 99,999 files 'part-100000-…' sorts lexicographically BEFORE
-    'part-99999-…'. The egress sort key must parse the integer index."""
-    names = [
-        "part-99999-uuid.snappy.parquet",
-        "part-100000-uuid.snappy.parquet",
-        "part-00001-uuid.snappy.parquet",
-    ]
-    key = lambda f: int(f.split("-")[1])  # noqa: E731 — mirrors service.py
-    assert sorted(names) != sorted(names, key=key)  # lexical order IS wrong
-    assert [key(f) for f in sorted(names, key=key)] == [1, 99999, 100000]
+def _sorted_8_partitions(spark):
+    # an explicit partition count: AQE does not coalesce it
+    return spark.range(0, 80_000).repartitionByRange(8, "id").sortWithinPartitions("id")
 
 
-def test_egress_spool_cleaned_up_after_exhaustion(spark, tmp_path):
-    """The spool directory dies with the iterator (prompt path) — the
-    atexit hook is only the abandoned-stream fallback."""
-    import glob
-
+def test_egress_holds_at_most_two_partitions(spark):
+    """The egress is partition-at-a-time: when the first batch of a
+    sorted 8-partition result arrives, at most 2 result-partition jobs
+    (the partition streamed and the one prefetched) have started, so
+    the driver never holds more than two partitions. All 8 run by the
+    end. Fails loudly if a Spark upgrade moves the private entry points
+    ``egress_batches`` uses."""
     from city_payroll_data_pipeline_spark.service import egress_batches
 
-    before = set(glob.glob("/tmp/flight_egress_*"))
-    _, batches = egress_batches(spark.range(0, 100))
-    during = set(glob.glob("/tmp/flight_egress_*")) - before
-    assert during  # spool exists while streaming
-    list(batches)  # exhaust
-    assert not (set(glob.glob("/tmp/flight_egress_*")) - before)
+    sc = spark.sparkContext
+    group = "test-egress-two-partitions"
 
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
-def test_egress_atexit_registry_does_not_grow(spark):
-    """A completed export must unregister its atexit fallback — a
-    long-lived Flight server serving millions of do_get calls would
-    otherwise accumulate one stale registry entry per export. The
-    fallback must survive only for abandoned (unexhausted) streams."""
-    import atexit
-
-    from city_payroll_data_pipeline_spark.service import egress_batches
-
-    registered = []
-    real_register = atexit.register
-    real_unregister = atexit.unregister
-
-    def spy_register(fn, *a, **kw):
-        registered.append(fn)
-        return real_register(fn, *a, **kw)
-
-    def spy_unregister(fn):
-        if fn in registered:
-            registered.remove(fn)
-        return real_unregister(fn)
-
-    atexit.register = spy_register
-    atexit.unregister = spy_unregister
+    sc.setJobGroup(group, group)
     try:
-        _, batches = egress_batches(spark.range(0, 10))
-        assert len(registered) == 1  # fallback armed while in flight
-        list(batches)
-        assert registered == []  # disarmed on completion
-        # abandoned stream keeps its (single) fallback armed
-        _, abandoned = egress_batches(spark.range(0, 10))
-        next(abandoned)
-        assert len(registered) == 1
-        abandoned.close()  # generator close runs finally -> unregister
-        assert registered == []
+        _, batches = egress_batches(_sorted_8_partitions(spark))
+        # the range sampling and shuffle jobs run when the stream is set up
+        before = jobs()
+        got = next(batches).column(0).to_pylist()
+        assert 1 <= jobs() - before <= 2
+        for batch in batches:
+            got.extend(batch.column(0).to_pylist())
+        assert got == list(range(80_000))
+        assert jobs() - before == 8
     finally:
-        atexit.register = real_register
-        atexit.unregister = real_unregister
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_abandoned_egress_stream_releases_jvm_server(spark):
+    """A client that stops after one batch: closing the generator tells
+    the JVM thread serving the partitions to stop, and the next egress
+    completes."""
+    import time
+
+    from city_payroll_data_pipeline_spark.service import egress_batches
+
+    jvm_thread = spark.sparkContext._jvm.java.lang.Thread
+
+    def serving():
+        return sum(
+            t.getName() == "serve toLocalIterator" and t.isAlive()
+            for t in jvm_thread.getAllStackTraces().keySet().toArray()
+        )
+
+    base = serving()
+    _, batches = egress_batches(_sorted_8_partitions(spark))
+    next(batches)
+    assert serving() == base + 1
+    batches.close()
+    deadline = time.monotonic() + 30
+    while serving() > base and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert serving() == base
+
+    _, again = egress_batches(spark.range(0, 1_000).orderBy("id"))
+    assert [v for b in again for v in b.column(0).to_pylist()] == list(range(1_000))
+
+
+# ``processed_at`` reaches clients as naive ``timestamp[ns]`` (UTC), the
+# type older clients were built against.
+_REPORT_WIRE = [
+    ("job_title", "string", True),
+    ("total_employee", "int64", False),
+    ("total_budget", "double", True),
+]
+_EXPORT_WIRE = {
+    "corporate": [
+        ("row_id", "string", True), ("year", "string", True),
+        ("department", "string", True), ("job_title", "string", True),
+        ("base_pay", "double", True), ("overtime_pay", "double", True),
+        ("total_amount", "double", True), ("overtime_status", "string", True),
+        ("loyalty_bonus_percentage", "double", True),
+        ("processed_at", "timestamp[ns]", True),
+    ],
+    "education": [
+        ("district_name", "string", True), ("school_name", "string", True),
+        ("job_title", "string", True), ("base_salary", "double", True),
+        ("fte_ratio", "double", True), ("experience_years", "double", True),
+        ("employment_status", "string", True), ("seniority_bonus", "double", True),
+        ("total_amount", "double", True),
+        ("cost_per_experience_year", "double", True),
+        ("processed_at", "timestamp[ns]", True),
+    ],
+    "hospital": [
+        ("hospital_name", "string", True), ("job_title", "string", True),
+        ("city", "string", True), ("state", "string", True),
+        ("total_patients", "int32", True),
+        ("avg_payment_per_patient", "double", True),
+        ("total_amount", "double", True),
+        ("processed_at", "timestamp[ns]", True),
+    ],
+}
+_WIRE_ROWS = {
+    "corporate": ["1", "2024", "Police", "Officer", "FT", "$100.00", "$90.00", "", ""],
+    "education": ["Doe", "Jane", "D1", "S1", "Teacher", "1.0", "5", "A", "50000"],
+    "hospital": ["Cedars-Sinai", "Los Angeles", "CA", "470 - JOINT", "2", "100.5", "90.0"],
+}
+
+
+@pytest.fixture(scope="module")
+def wire_tenants(flight_setup):
+    """One upload per industry, each by its own tenant."""
+    from city_payroll_data_pipeline_spark.engine import RAW_COLUMNS
+
+    engine, _, client, csv_dir = flight_setup
+    for industry, row in _WIRE_ROWS.items():
+        engine.registry.register(f"WIRE_{industry}", industry, "pw")
+        path = csv_dir / f"{industry}_wire.csv"
+        with open(path, "w", newline="") as f:
+            csv.writer(f).writerows([RAW_COLUMNS[industry], row])
+        client.upload_csv(str(path), f"WIRE_{industry}", "pw")
+    return client
+
+
+@pytest.mark.parametrize("action", ["get_budget_report", "get_full_clean"])
+@pytest.mark.parametrize("industry", sorted(_WIRE_ROWS))
+def test_flight_wire_schema_pinned(wire_tenants, industry, action):
+    """The Arrow schema a client reads is part of the wire contract:
+    names, types and nullability of the report and the export, per
+    industry."""
+    import json
+
+    import pyarrow.flight as flight
+
+    ticket = flight.Ticket(json.dumps({
+        "action": action, "client_id": f"WIRE_{industry}", "password": "pw",
+        "target_file": f"{industry}_wire.csv",
+    }).encode())
+    table = wire_tenants.client.do_get(ticket).read_all()
+    got = [(f.name, str(f.type), f.nullable) for f in table.schema]
+    want = _REPORT_WIRE if action == "get_budget_report" else _EXPORT_WIRE[industry]
+    assert got == want
+    assert table.num_rows == 1
+
+
+def test_do_put_raw_csv_matches_pandas_writer(flight_setup, tmp_path):
+    """do_put writes the Raw CSV with pyarrow, which quotes every string
+    and writes an empty string as ``""`` (pandas wrote bare fields). A
+    quoted comma, a null cell and an empty-string cell ingest to the
+    same fact rows as the CSV that pandas wrote."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.flight as flight
+
+    from city_payroll_data_pipeline_spark.schemas import CORPORATE_RAW_COLUMNS
+
+    engine, _, client, _ = flight_setup
+    rows = [
+        ["1", "2024", "Police, Metro", "Officer, Senior", "FT",
+         "$1,100.00", "$10.00", "$0.00", "$5.00"],
+        ["2", "2024", "", "Officer, Senior", "FT", "$200.00", None, "$0.00", ""],
+        ["3", "2024", None, "Captain", "", "$300.00", "$90.00", "", "$5.00"],
+    ]
+    table = pa.table(
+        [pa.array(col, pa.string()) for col in zip(*rows)],
+        names=CORPORATE_RAW_COLUMNS,
+    )
+    name = "corporate_quoting.csv"
+    meta = json.dumps({"client_id": "ACME", "password": "s3cret", "filename": name})
+    writer, _ = client.client.do_put(flight.FlightDescriptor.for_path(meta), table.schema)
+    writer.write_table(table)
+    writer.close()
+
+    pandas_csv = tmp_path / "corporate_quoting_pandas.csv"
+    table.to_pandas().to_csv(pandas_csv, index=False)
+    engine.ingest("ACME", "s3cret", str(pandas_csv))
+
+    def fact_rows(basename):
+        df = engine.fact_table("ACME", "s3cret", basename).drop("processed_at")
+        return sorted(tuple(r) for r in df.collect())
+
+    got = fact_rows(name)
+    assert len(got) == 3
+    assert got == fact_rows(pandas_csv.name)
