@@ -29,6 +29,7 @@ from city_payroll_data_pipeline_spark.functions.text import (
     token_hash60,
     tokens_array,
 )
+from city_payroll_data_pipeline_spark.operators.iterate import fixed_point
 
 # --------------------------------------------------------------------------
 # Exact dedup
@@ -604,17 +605,11 @@ def connected_components(
     smallest label among itself and its neighbors; converges in
     O(component diameter) rounds (near-dup clusters are shallow — a
     dup of a dup of X is a dup of X, so diameters are small). Each
-    round is one join + one groupBy; the loop stops early on a
-    converged round. For billion-edge graphs swap in the large-star/
-    small-star contraction (alternating min-label exchange), which
-    cuts rounds to O(log n) with the same join primitives."""
-    # localCheckpoint (eager), NOT persist: caching keeps the DATA but
-    # every action still re-analyzes the full accumulated logical plan,
-    # and for an iterative algorithm the plan grows each round — the
-    # driver-side Catalyst work came to dominate (measured 2s → 4s →
-    # 11s per round). Checkpointing truncates the lineage so each
-    # round's plan is O(1). On a cluster prefer checkpoint() with a
-    # reliable dir if executor loss must be recoverable mid-run.
+    round is one join + one groupBy; the loop stops on the first round
+    that changes no label and raises after ``max_iters`` rounds without
+    one. For billion-edge graphs swap in the large-star/small-star
+    contraction (alternating min-label exchange), which cuts rounds to
+    O(log n) with the same join primitives."""
     # checkpoint the input first: the bidirectional union traverses
     # `pairs` twice, and with an expensive upstream (the whole minhash
     # pipeline) each branch would recompute it
@@ -630,46 +625,36 @@ def connected_components(
         .withColumn("component", F.col("doc_id"))
         .localCheckpoint()
     )
-    # convergence signal: exact count of nodes whose label improved
-    # this round, carried as a flag through the same join the update
-    # needs — works for ANY orderable id type. (The previous
-    # sum-of-labels shortcut silently broke on string doc ids:
-    # sum(string) is NULL, NULL == NULL ended the loop after round 1
-    # and split every component of diameter ≥ 2.)
-    for _ in range(max_iters):
+
+    def propagate(labels: DataFrame, _) -> DataFrame:
         neigh = (
             edges.join(labels, edges.src == labels.doc_id)
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("component").alias("neigh_min"))
         )
-        # LAZY checkpoint (VERDICT r10 item 3 — fuse the convergence
-        # count into the round's materialization): the count_if action
-        # below is the job that computes the round's update, and a
-        # lazily-marked local checkpoint stores the partitions as that
-        # same job computes them — one job per round instead of an
-        # eager-checkpoint job followed by a count job re-scanning the
-        # stored frame. Lineage truncation is identical (the returned
-        # frame is backed by the stored RDD either way), and every
-        # round IS materialized: the convergence probe runs
-        # unconditionally.
-        upd = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("neigh_min"), F.col("component")),
-                ).alias("component"),
-                F.coalesce(
-                    F.col("neigh_min") < F.col("component"), F.lit(False)
-                ).alias("_changed"),
-            )
-            .localCheckpoint(eager=False)
+        # the change flag rides the join the update needs, so the
+        # convergence count works for ANY orderable id type (a
+        # sum-of-labels signal is NULL on string ids and ended the
+        # loop after one round)
+        return labels.join(neigh, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                F.col("component"),
+                F.coalesce(F.col("neigh_min"), F.col("component")),
+            ).alias("component"),
+            F.coalesce(
+                F.col("neigh_min") < F.col("component"), F.lit(False)
+            ).alias("_changed"),
         )
-        labels = upd.drop("_changed")
-        if upd.agg(F.count_if("_changed")).collect()[0][0] == 0:
-            break
-    return labels
+
+    labels, _ = fixed_point(
+        labels,
+        propagate,
+        lambda new, _: new.agg(F.count_if("_changed")).collect()[0][0],
+        max_iters,
+        until=lambda changed: changed == 0,
+    )
+    return labels.drop("_changed")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -717,44 +702,39 @@ def connected_components_star(
     whose components may be long chains (linked near-dup shingles,
     citation chains); the simpler propagation wins on shallow near-dup
     clusters. Each round is two groupBy+join passes over the edge
-    frame; convergence is an exact except-based fixpoint check on the
-    (small, post-contraction) edge set."""
+    frame; convergence is an exact set-equality check of consecutive
+    (small, post-contraction) edge sets, and ``max_iters`` rounds
+    without a fixpoint raise."""
     e = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
-    converged = False
-    for _ in range(max_iters):
-        # LAZY checkpoint + ONE-job fixpoint probe (VERDICT r10 item 3
-        # applied to the star engine): both edge sets are DISTINCT by
-        # construction, so set equality ⟺ the tagged union has no
-        # (u, v) whose +1/−1 tags don't cancel — one shuffle, one job,
-        # and that job doubles as the materialization of the lazily
-        # checkpointed round (was: an eager checkpoint job plus TWO
-        # exceptAll probe jobs, each its own shuffle).
-        nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        sym_diff = (
-            nxt.select("u", "v", F.lit(1).alias("_t"))
-            .unionAll(e.select("u", "v", F.lit(-1).alias("_t")))
+
+    def changed(new: DataFrame, old: DataFrame) -> int:
+        # both edge sets are DISTINCT by construction, so set equality
+        # ⟺ the tagged union has no (u, v) whose +1/−1 tags don't
+        # cancel: one shuffle, one job
+        return (
+            new.select("u", "v", F.lit(1).alias("_t"))
+            .unionAll(old.select("u", "v", F.lit(-1).alias("_t")))
             .groupBy("u", "v")
             .agg(F.sum("_t").alias("_t"))
             .filter(F.col("_t") != 0)
+            .limit(1)
+            .count()
         )
-        if sym_diff.limit(1).count() == 0:
-            e = nxt
-            converged = True
-            break
-        e = nxt
-    if not converged:
-        # the star-forest assumption below only holds at the fixpoint;
-        # labeling a non-converged edge set would silently split
-        # components, so fail loudly instead
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint after {max_iters} "
-            "rounds (expected O(log n)); raise max_iters"
-        )
+
+    # the star-forest labeling below only holds at the fixpoint, so an
+    # unconverged edge set must raise, never be labeled
+    e, _ = fixed_point(
+        e,
+        lambda e, _: _small_star(_large_star(e)),
+        changed,
+        max_iters,
+        until=lambda n: n == 0,
+    )
     # converged edge set is a star forest: (node → root); roots appear
     # only on the right — they label themselves
     roots = e.select(F.col("v").alias("u"), F.col("v")).distinct()

@@ -16,18 +16,22 @@ single exact-operand double division — bit-identical across engines.
 This is the same strategy as the suite's DECIMAL-routed money sums:
 never let an order-dependent float sum cross an aggregation.
 
-Scale: each iteration is one shuffle-join of edges⋈ranks on ``src``
-plus one group-by shuffle on ``dst`` — the same budget as a single
-large join; `localCheckpoint` every few rounds truncates the lineage
-exactly as connected_components does (operators/dedup.py:335+,
-measured plan-growth blowup documented there). Edge normalization
-(out-degree totals) is computed once, outside the loop.
+Scale: each round is one shuffle-join of edges⋈scores on one endpoint
+plus one group-by shuffle on the other — the same budget as a single
+large join — run by :func:`~.iterate.fixed_point`, which checkpoints
+every round's node-sized state and reads one scalar from it in the
+same job. That scalar is the only driver traffic and feeds the next
+round as a literal: PageRank's dangling mass, HITS's normalization
+total. Edge normalization (out-weight totals) is computed once,
+outside the loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from city_payroll_data_pipeline_spark.operators.iterate import fixed_point
 
 SCALE = 10**9  # rank fixed-point scale: 1e-9 resolution
 
@@ -59,7 +63,6 @@ def pagerank_scaled(
     damping_num: int = 85,
     damping_den: int = 100,
     iters: int = 8,
-    checkpoint_every: int = 4,
     teleport_node=None,
     collect_bound: int | None = None,
 ) -> DataFrame:
@@ -88,6 +91,11 @@ def pagerank_scaled(
     seed (related-entity ranking). rank_0 is likewise concentrated
     on the seed.
 
+    Scale: the distributed path runs ``iters`` fixed-point rounds
+    (operators/iterate.py). Each node carries a dangling flag, so a
+    round's probe is its dangling mass, summed in the job that stores
+    the round; the next round adds its share as a literal.
+
     ``collect_bound``: driver fixed-point fast path for edge lists the
     CALLER knows are bounded by construction (the bt_mm_scaled /
     pq_codebook_trained precedent — e.g. the trade queries aggregate
@@ -111,21 +119,33 @@ def pagerank_scaled(
             edges, damping_num, damping_den, iters, teleport_node,
             collect_bound,
         )
-    # Materialize the edge list once before anything else: node
-    # universe, out-weights, and the dangling probe all re-derive from
-    # it, and without this the (possibly expensive) upstream plan that
-    # produced the edges — e.g. a multi-way fact join — would be
-    # recomputed for each of those derivations. The aggregated edge
-    # frame is the small thing here; its producer is not.
+    # Materialize the edge list once before anything else: the node
+    # universe and the out-weights both re-derive from it, and without
+    # this the (possibly expensive) upstream plan that produced the
+    # edges — e.g. a multi-way fact join — would be recomputed for each
+    # derivation. The aggregated edge frame is the small thing here;
+    # its producer is not.
     edges = edges.localCheckpoint(eager=True)
 
-    # node universe: anything appearing as src or dst (dedup shuffle, once)
+    # node universe (one dedup shuffle), each node flagged dangling
+    # when it never appears as a source: its mass is redistributed
     nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
+        edges.select(
+            F.col("src").alias("node"), F.lit(False).alias("dangling")
+        )
+        .union(edges.select("dst", F.lit(True)))
+        .groupBy("node")
+        .agg(F.bool_and("dangling").alias("dangling"))
+        .localCheckpoint(eager=False)
     )
-    n_nodes = nodes.count()  # scalar; required by the formula itself
+    seed = (
+        F.lit(True) if teleport_node is None
+        else F.col("node") == F.lit(teleport_node)
+    )
+    # scalars the formula needs, in one job that also stores `nodes`
+    n_nodes, n_dangling = nodes.agg(
+        F.count("*"), F.count_if(F.col("dangling") & seed)
+    ).collect()[0]
     if n_nodes == 0:
         raise ValueError("pagerank_scaled: edge list is empty (no nodes)")
 
@@ -134,36 +154,18 @@ def pagerank_scaled(
     norm_edges = edges.join(out_w, "src").select("src", "dst", "weight", "out_w")
     norm_edges = norm_edges.persist()
 
-    if teleport_node is None:
-        base_col = F.lit(
-            (damping_den - damping_num) * SCALE // damping_den // n_nodes
-        )
-        ranks = nodes.withColumn(
-            "rank_scaled", F.lit(SCALE // n_nodes).cast("long")
-        )
-    else:
-        seed_base = (damping_den - damping_num) * SCALE // damping_den
-        base_col = F.when(
-            F.col("node") == F.lit(teleport_node), F.lit(seed_base)
-        ).otherwise(F.lit(0))
-        ranks = nodes.withColumn(
-            "rank_scaled",
-            F.when(F.col("node") == F.lit(teleport_node), F.lit(SCALE))
-            .otherwise(F.lit(0))
-            .cast("long"),
-        )
+    # teleport, rank_0 and dangling mass are spread over all nodes, or
+    # (personalized) put on the seed alone
+    spread = n_nodes if teleport_node is None else 1
 
-    # nodes with no outgoing edge contribute their mass uniformly.
-    # Materialized once: when the graph has none (typical for
-    # interaction graphs where every node acts), the per-iteration
-    # dangling-mass collect is skipped entirely — saving one full
-    # evaluation of the rank lineage per round.
-    dangling_nodes = nodes.join(
-        out_w.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist()
-    has_dangling = dangling_nodes.count() > 0
+    def on_seed(v: int):
+        return F.when(seed, F.lit(v)).otherwise(F.lit(0))
 
-    for i in range(iters):
+    base_col = on_seed(
+        (damping_den - damping_num) * SCALE // damping_den // spread
+    )
+
+    def update(ranks: DataFrame, dangling: int) -> DataFrame:
         contribs = (
             norm_edges.join(ranks, norm_edges.src == ranks.node)
             .select(
@@ -173,51 +175,35 @@ def pagerank_scaled(
             .groupBy("node")
             .agg(F.sum("contrib").alias("in_contrib"))
         )
-        if has_dangling:
-            dangling = int(
-                dangling_nodes.join(ranks, "node")
-                .agg(F.coalesce(F.sum("rank_scaled"), F.lit(0)).alias("d"))
-                .collect()[0]["d"]
-            )  # bounded scalar (one long), same as CC convergence checks
-            if teleport_node is None:
-                share_col = F.lit(
-                    damping_num * dangling // (damping_den * n_nodes)
+        return ranks.join(contribs, "node", "left").select(
+            "node",
+            (
+                base_col
+                + F.expr(
+                    f"({damping_num} * coalesce(in_contrib, 0))"
+                    f" div {damping_den}"
                 )
-            else:
-                share_col = F.when(
-                    F.col("node") == F.lit(teleport_node),
-                    F.lit(damping_num * dangling // damping_den),
-                ).otherwise(F.lit(0))
-        else:
-            share_col = F.lit(0)
-        ranks = (
-            ranks.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    base_col
-                    + F.expr(
-                        f"({damping_num} * coalesce(in_contrib, 0))"
-                        f" div {damping_den}"
-                    )
-                    + share_col
-                ).alias("rank_scaled"),
-            )
+                + on_seed(damping_num * dangling // (damping_den * spread))
+            ).alias("rank_scaled"),
+            "dangling",
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            # truncate lineage: the iterative plan otherwise doubles per
-            # round (same pathology measured in connected_components)
-            ranks = ranks.localCheckpoint(eager=True)
 
-    # materialize the node-sized result BEFORE dropping the cached
-    # inputs: the in-loop checkpoint deliberately skips the final
-    # round, so the returned lineage still references norm_edges —
-    # unpersisting first would force a full recompute on the caller's
-    # first action
-    ranks = ranks.localCheckpoint(eager=True)
+    # the probe is the round's dangling mass: the next round's literal
+    ranks, _ = fixed_point(
+        nodes.select(
+            "node",
+            on_seed(SCALE // spread).cast("long").alias("rank_scaled"),
+            "dangling",
+        ),
+        update,
+        lambda new, _: new.agg(
+            F.sum(F.when(F.col("dangling"), F.col("rank_scaled")).otherwise(0))
+        ).collect()[0][0],
+        iters,
+        value=n_dangling * (SCALE // spread),
+    )
     norm_edges.unpersist()
-    dangling_nodes.unpersist()
-    return ranks
+    return ranks.select("node", "rank_scaled")
 
 
 def _pagerank_collected(
@@ -253,41 +239,27 @@ def _pagerank_collected(
             f"{zero_out[:5]}; edge weights must be positive"
         )
 
-    if teleport_node is None:
-        base = {
-            v: (damping_den - damping_num) * SCALE // damping_den // n_nodes
-            for v in nodes
-        }
-        ranks = {v: SCALE // n_nodes for v in nodes}
-    else:
-        seed_base = (damping_den - damping_num) * SCALE // damping_den
-        base = {v: (seed_base if v == teleport_node else 0) for v in nodes}
-        ranks = {v: (SCALE if v == teleport_node else 0) for v in nodes}
+    # the distributed path's teleport split: all nodes, or the seed
+    spread = n_nodes if teleport_node is None else 1
 
+    def on_seed(v: int) -> dict:
+        return {
+            u: (v if teleport_node is None or u == teleport_node else 0)
+            for u in nodes
+        }
+
+    base = on_seed(
+        (damping_den - damping_num) * SCALE // damping_den // spread
+    )
+    ranks = on_seed(SCALE // spread)
     dangling_nodes = [v for v in nodes if v not in out_w]
     for _ in range(iters):
         contrib = {}
         for r in rows:
             c = ranks[r["src"]] * r["weight"] // out_w[r["src"]]
             contrib[r["dst"]] = contrib.get(r["dst"], 0) + c
-        if dangling_nodes:
-            dangling = sum(ranks[v] for v in dangling_nodes)
-            if teleport_node is None:
-                share = {
-                    v: damping_num * dangling // (damping_den * n_nodes)
-                    for v in nodes
-                }
-            else:
-                share = {
-                    v: (
-                        damping_num * dangling // damping_den
-                        if v == teleport_node
-                        else 0
-                    )
-                    for v in nodes
-                }
-        else:
-            share = {v: 0 for v in nodes}
+        dangling = sum(ranks[v] for v in dangling_nodes)
+        share = on_seed(damping_num * dangling // (damping_den * spread))
         ranks = {
             v: base[v]
             + damping_num * contrib.get(v, 0) // damping_den
@@ -355,19 +327,6 @@ def _hits_collected(
     )
 
 
-def _sum_normalize(scores: DataFrame, raw: str, out: str) -> DataFrame:
-    """Rescale an integer score column so it sums to SCALE:
-    ``out = (raw * SCALE) div total``, all operands exact
-    (DECIMAL(38,0) product, truncating div — Spark ``div`` and DuckDB
-    ``//`` agree on positives). The 1-row total rides a broadcast
-    nested-loop join, never a driver collect."""
-    total = scores.agg(F.sum(raw).alias("__total"))
-    return scores.crossJoin(F.broadcast(total)).select(
-        "node",
-        F.expr(f"CAST({raw} * {SCALE} div __total AS BIGINT)").alias(out),
-    )
-
-
 def hits_scaled(
     edges: DataFrame, iters: int = 6, collect_bound: int | None = None
 ) -> DataFrame:
@@ -388,12 +347,11 @@ def hits_scaled(
     count, so raw ≤ 1e9·Σw < 1e22 even at 10^13 interactions — the
     DECIMAL(38,0) sums and the ×SCALE product (< 1e31) never saturate.
 
-    Scale shape: per half-step ONE edges⋈scores shuffle join + ONE
-    group-by on the opposite endpoint (identical budget to a PageRank
-    round), then a node-sized eager localCheckpoint that both
-    truncates the iterative lineage and makes the 1-row normalization
-    total a cheap re-read instead of a plan re-evaluation. Zero driver
-    round trips — the total stays in-plan via a broadcast cross join.
+    Scale shape: each half-step is one fixed-point round: ONE
+    edges⋈scores shuffle join + ONE group-by on the opposite endpoint
+    (the budget of a PageRank round), whose probe is the sum of the new
+    raw scores. The next half-step normalizes with that total as a
+    literal, so no cross join or second pass over the scores is needed.
     """
     if iters < 1:
         raise ValueError(f"hits_scaled: iters must be >= 1, got {iters}")
@@ -407,54 +365,52 @@ def hits_scaled(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    n_nodes = nodes.count()  # scalar; sets the uniform init, as in PageRank
+    n_nodes = nodes.count()  # scalar; the uniform init's total
     if n_nodes == 0:
         raise ValueError("hits_scaled: edge list is empty (no nodes)")
-    nodes = nodes.localCheckpoint(eager=True)
 
-    hubs = nodes.withColumn("hub_scaled", F.lit(SCALE // n_nodes).cast("long"))
-    auths = None
-    for _ in range(iters):
-        a_raw = (
-            edges.join(hubs, edges.src == hubs.node)
-            .groupBy(F.col("dst").alias("node"))
+    def scaled(side: str, total: int):
+        # sum-normalize a side's raw scores by their probed total
+        return F.expr(
+            f"CAST({side}_raw * {SCALE} div {total} AS BIGINT)"
+        ).alias(f"{side}_scaled")
+
+    def half_step(scores: DataFrame, total: int) -> DataFrame:
+        # normalize the side the previous round summed and push it
+        # across the edges to the other side's raw sums
+        side, other, here, there = (
+            ("hub", "auth", "src", "dst") if "hub_raw" in scores.columns
+            else ("auth", "hub", "dst", "src")
+        )
+        scores = scores.select("node", scaled(side, total))
+        raw = (
+            edges.join(scores, edges[here] == scores.node)
+            .groupBy(F.col(there).alias("node"))
             .agg(
                 F.sum(
-                    F.col("hub_scaled").cast("decimal(38,0)") * F.col("weight")
+                    F.col(f"{side}_scaled").cast("decimal(38,0)")
+                    * F.col("weight")
                 ).alias("raw")
             )
         )
         # keep sinks/sources with no incoming mass on the board at 0
-        a_raw = (
-            nodes.join(a_raw, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("raw"), F.lit(0).cast("decimal(38,0)")).alias(
-                    "raw"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        return scores.join(raw, "node", "left").select(
+            "node",
+            f"{side}_scaled",
+            F.coalesce(F.col("raw"), F.lit(0).cast("decimal(38,0)")).alias(
+                f"{other}_raw"
+            ),
         )
-        auths = _sum_normalize(a_raw, "raw", "auth_scaled")
-        h_raw = (
-            edges.join(auths, edges.dst == auths.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(
-                F.sum(
-                    F.col("auth_scaled").cast("decimal(38,0)") * F.col("weight")
-                ).alias("raw")
-            )
-        )
-        h_raw = (
-            nodes.join(h_raw, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("raw"), F.lit(0).cast("decimal(38,0)")).alias(
-                    "raw"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        hubs = _sum_normalize(h_raw, "raw", "hub_scaled")
-    return hubs.join(auths, "node").select("node", "hub_scaled", "auth_scaled")
+
+    # hub_raw = 1 with total n normalizes to exactly SCALE // n, the
+    # uniform init; each probe is the total of the raw sums just made
+    scores, totals = fixed_point(
+        nodes.withColumn("hub_raw", F.lit(1).cast("decimal(38,0)")),
+        half_step,
+        lambda new, _: int(new.agg(F.sum(new.columns[-1])).collect()[0][0]),
+        2 * iters,
+        value=n_nodes,
+    )
+    return scores.select("node", scaled("hub", totals[-1]), "auth_scaled")

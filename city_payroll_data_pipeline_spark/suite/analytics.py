@@ -27,6 +27,7 @@ from city_payroll_data_pipeline_spark.operators.graph import (
     hits_scaled,
     pagerank_scaled,
 )
+from city_payroll_data_pipeline_spark.operators.iterate import fixed_point
 from city_payroll_data_pipeline_spark.suite import Query, table
 from city_payroll_data_pipeline_spark.suite.parity import _sql_dec_sum, _sql_round
 
@@ -1184,8 +1185,9 @@ FROM m
 #
 # Scale: per round, one degree groupBy + two semi joins on the edge
 # list; node labels are side-tagged strings so the bipartite sides
-# can't collide. The per-round stats are bounded driver reads (the
-# pagerank convergence pattern). At 100 TB run O(log n) rounds — the
+# can't collide. The per-round stats are the fixed-point probe
+# (operators/iterate.py): one bounded driver read whose job also
+# materializes the round. At 100 TB run O(log n) rounds — the
 # trace shows how few are needed (3 here: the tested graphs reach
 # fixpoint in round 1-2 and the equal tail rows certify it).
 # --------------------------------------------------------------------------
@@ -1205,50 +1207,47 @@ def q_k_core_decay(spark, sf_dir):
         .distinct()
         .localCheckpoint()
     )
-    deg0 = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    k = int(
-        deg0.agg(F.ceil(F.percentile("d", 0.75)).alias("k")).collect()[0]["k"]
-    )
-    rows = []
-    cur = edges
-    for rnd in range(1, _KCORE_ROUNDS + 1):
-        deg = (
+
+    def degrees(cur):
+        return (
             cur.select(F.col("u").alias("node"))
             .unionAll(cur.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("d"))
         )
-        keep = deg.where(F.col("d") >= k).select("node")
-        # LAZY checkpoint + ONE fused stats job per round (VERDICT r10
-        # item 3's cadence fix applied here): the exploded-endpoint
-        # aggregate below materializes the lazily checkpointed round
-        # AND reads off both certificates in the same job — each edge
-        # row contributes exactly 2 endpoint rows, so
-        # edges_left = count/2 exactly, and nodes_left is the exact
-        # distinct-endpoint count (was: an eager checkpoint job, a
-        # count job, and a distinct-count job — 3 jobs per round).
-        cur = (
+
+    k = int(
+        degrees(edges)
+        .agg(F.ceil(F.percentile("d", 0.75)).alias("k"))
+        .collect()[0]["k"]
+    )
+
+    def peel(cur, _):
+        keep = degrees(cur).where(F.col("d") >= k).select("node")
+        return (
             cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
-        stats = (
+
+    def stats(cur, _):
+        # each edge row contributes exactly 2 endpoint rows, so
+        # edges_left = count div 2 exactly (a double /2 would round past
+        # 2^53 endpoint rows), and nodes_left is the exact distinct count
+        return (
             cur.select(F.explode(F.array("u", "v")).alias("node"))
             .agg(
-                # integer div: exact at any scale (a double /2 would
-                # round past 2^53 endpoint rows)
                 F.expr("count(*) div 2").alias("edges_left"),
                 F.countDistinct("node").alias("nodes_left"),
             )
             .collect()[0]
         )
-        rows.append((rnd, k, stats["nodes_left"], int(stats["edges_left"])))
+
+    _, trace = fixed_point(edges, peel, stats, _KCORE_ROUNDS)
+    rows = [
+        (rnd, k, s["nodes_left"], int(s["edges_left"]))
+        for rnd, s in enumerate(trace, 1)
+    ]
     return spark.createDataFrame(
         rows, "round int, k int, nodes_left bigint, edges_left bigint"
     )

@@ -4500,12 +4500,13 @@ def bpe_replay_ctes(
 
     Each round applies its rewrite ONLY when the round's best pair
     clears ``min_pair`` — mirroring the trainer's early stop
-    (operators/bpe.py:110). Once one round stalls, the vocabulary is
-    unchanged, so every later round re-finds the same sub-threshold
-    best and stalls too: the replay converges to the trainer's
-    stopped state instead of applying merges the trainer refuses. A
-    round with NO adjacent pairs left (every word a single symbol)
-    likewise passes the vocabulary through via the LEFT JOIN."""
+    (the ``min_pair_count`` break in ``operators/bpe.py::train_bpe``).
+    Once one round stalls, the vocabulary is unchanged, so every later
+    round re-finds the same sub-threshold best and stalls too: the
+    replay converges to the trainer's stopped state instead of applying
+    merges the trainer refuses. A round with NO adjacent pairs left
+    (every word a single symbol) likewise passes the vocabulary through
+    via the LEFT JOIN."""
     s = "chr(31)"
     ctes = [
         r"""words AS MATERIALIZED (
@@ -7097,14 +7098,13 @@ FILTER_AGREEMENT_KAPPA_SQL = _kappa_sql()
 # Scale: one (doc, word) aggregate (the exchange the TTR needs
 # anyway), one per-doc reduce; the training sums are ONE partial
 # aggregation to a single row of d(d+1)/2 + d + 1 = 15 scalars; the
-# solve stays IN-PLAN as column arithmetic on that 1-row frame (the
-# hits_scaled normalization precedent — zero driver round trips) and
-# rides back over a broadcast cross join. Magnitude bound: DECIMAL /
-# HUGEINT hold |det| ≤ 24·(F²·n)⁴ with F = 100, so the integer-exact
-# path is safe to n_train ≈ 3·10⁴; at 100 TB keep the split rate such
-# that the training sample stays bounded (the PQ bounded-training
-# precedent) — probe weights are corpus statistics that converge long
-# before that.
+# solve stays IN-PLAN as column arithmetic on that 1-row frame (zero
+# driver round trips) and rides back over a broadcast cross join.
+# Magnitude bound: DECIMAL / HUGEINT hold |det| ≤ 24·(F²·n)⁴ with
+# F = 100, so the integer-exact path is safe to n_train ≈ 3·10⁴; at
+# 100 TB keep the split rate such that the training sample stays
+# bounded (the PQ bounded-training precedent) — probe weights are
+# corpus statistics that converge long before that.
 # --------------------------------------------------------------------------
 
 _PROBE_TRAIN_MOD = 3  # train on doc_id % 3 == 0; score the whole corpus

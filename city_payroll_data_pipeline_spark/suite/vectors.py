@@ -75,6 +75,13 @@ _Q_CORPUS_SQL = f"""
 SELECT vec_id, {_QUANT_SQL} AS q FROM embeddings
 """
 
+# the quantized corpus with its squared norms: the ``qv`` CTE of the
+# cosine, hard-negative, LSH and IVF oracles
+_QV_SQL = f"""qv AS (
+  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
+  FROM ({_Q_CORPUS_SQL})
+)"""
+
 _COSINE_SQL = (
     "CASE WHEN sqrt(CAST(n2a AS DOUBLE) * CAST(n2b AS DOUBLE)) > 0 "
     "THEN CAST(dot AS DOUBLE) / sqrt(CAST(n2a AS DOUBLE) * CAST(n2b AS DOUBLE)) "
@@ -215,10 +222,7 @@ def q_cosine_topk(spark, sf_dir, query_ids=None):
 
 def _cosine_topk_sql(query_ids=None) -> str:
     return f"""
-WITH qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
+WITH {_QV_SQL},
 pairs AS (
   SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
          {_dot_sql('p.q', 'c.q')} AS dot, p.n2 AS n2a, c.n2 AS n2b
@@ -341,10 +345,7 @@ def q_hard_negative_mining(spark, sf_dir):
 
 
 HARD_NEGATIVE_MINING_SQL = f"""
-WITH qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
+WITH {_QV_SQL},
 pairs AS (
   SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
          {_dot_sql('p.q', 'c.q')} AS dot, p.n2 AS n2a, c.n2 AS n2b
@@ -426,10 +427,7 @@ def q_lsh_ann_topk(spark, sf_dir, query_ids=None):
 
 def _lsh_ann_topk_sql(query_ids=None) -> str:
     return f"""
-WITH qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
+WITH {_QV_SQL},
 planes AS ({_PLANES_SQL}),
 signs AS (
   SELECT v.vec_id, pl.p,
@@ -489,10 +487,7 @@ def q_ivf_ann_topk(spark, sf_dir, query_ids=None):
 
 def _ivf_ann_topk_sql(query_ids=None) -> str:
     return f"""
-WITH qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
+WITH {_QV_SQL},
 cents AS (
   SELECT CAST(vec_id // {CENTROID_STRIDE} AS INT) AS list_id,
          q AS cq, n2 AS cn2
@@ -633,10 +628,7 @@ def q_ivf_probe_curve(spark, sf_dir):
 # IVF cell assignment shared verbatim by the probe-curve and IVF-PQ
 # oracles: seed centroids, every vector's cells ranked by cosine
 # (ties → smaller list_id), and each corpus vector's nearest cell.
-_IVF_CELLS_SQL = f"""qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
+_IVF_CELLS_SQL = f"""{_QV_SQL},
 cents AS (
   SELECT CAST(vec_id // {CENTROID_STRIDE} AS INT) AS list_id,
          q AS cq, n2 AS cn2
@@ -1590,10 +1582,7 @@ def _ndcg_sql(query_ids=None) -> str:
     disc = _sql_round("1.0 / log2(CAST(l.rank AS DOUBLE) + 1)", 12)
     idcg_disc = _sql_round("1.0 / log2(CAST(i AS DOUBLE) + 1)", 12)
     return f"""
-WITH qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
+WITH {_QV_SQL},
 exact_pairs AS (
   SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
          {_dot_sql('p.q', 'c.q')} AS dot, p.n2 AS n2a, c.n2 AS n2b
@@ -1760,14 +1749,14 @@ FROM ranked WHERE rank <= {K}
 """
 
 
-def _pq_ann_topk_sql(query_ids=None) -> str:
-    return f"""
-WITH subs AS ({_PQ_SUBS_SQL}),
-cb AS ({_PQ_CB_SQL}),
-enc AS ({_PQ_ENC_SQL}),
-lut AS (
+def _pq_adc_sql(cb: str, query_ids) -> str:
+    """The flat PQ ADC chain after ``subs`` and ``enc``: each query's
+    subvector dot with every codeword of the codebook CTE ``cb``
+    (``lut``), summed over each corpus vector's codes (``scored``),
+    then the top-K tail."""
+    return f"""lut AS (
   SELECT s.vec_id AS query_id, s.m, c.cw, {_dot_sql('s.sub', 'c.cq')} AS dotv
-  FROM subs s JOIN cb c ON s.m = c.m
+  FROM subs s JOIN {cb} c ON s.m = c.m
   WHERE {_qpred(query_ids, 's')}
 ),
 scored AS (
@@ -1778,6 +1767,14 @@ scored AS (
   GROUP BY l.query_id, e.vec_id
 ),
 {_ADC_TOPK_SQL}"""
+
+
+def _pq_ann_topk_sql(query_ids=None) -> str:
+    return f"""
+WITH subs AS ({_PQ_SUBS_SQL}),
+cb AS ({_PQ_CB_SQL}),
+enc AS ({_PQ_ENC_SQL}),
+{_pq_adc_sql("cb", query_ids)}"""
 
 
 PQ_ANN_TOPK_SQL = _pq_ann_topk_sql()
@@ -1955,19 +1952,7 @@ enc AS MATERIALIZED (SELECT vec_id, m, cw FROM (
                             ORDER BY {d2('s.sub', 'c.cq')} ASC,
                             c.cw ASC) AS r
   FROM subs s JOIN {last} c ON s.m = c.m) WHERE r = 1),
-lut AS (
-  SELECT s.vec_id AS query_id, s.m, c.cw, {_dot_sql('s.sub', 'c.cq')} AS dotv
-  FROM subs s JOIN {last} c ON s.m = c.m
-  WHERE {_qpred(query_ids, 's')}
-),
-scored AS (
-  SELECT l.query_id, e.vec_id AS neighbor_id,
-         CAST(SUM(dotv) AS BIGINT) AS adc_dot
-  FROM enc e JOIN lut l ON e.m = l.m AND e.cw = l.cw
-  WHERE e.vec_id <> l.query_id
-  GROUP BY l.query_id, e.vec_id
-),
-{_ADC_TOPK_SQL}"""
+{_pq_adc_sql(last, query_ids)}"""
 
 
 PQ_TRAINED_RECALL_SQL = recall_certificate_sql((
@@ -2393,10 +2378,7 @@ def _mmr_sql() -> str:
         f"{{'score10': CAST({score10('x')} AS DECIMAL(28,6)),"
         f" 'negnid': -x.nid, 'rel': x.rel}}))"
     )
-    return f"""WITH RECURSIVE qv AS (
-  SELECT vec_id, q, {_dot_sql('q', 'q')} AS n2
-  FROM ({_Q_CORPUS_SQL})
-),
+    return f"""WITH RECURSIVE {_QV_SQL},
 pairs AS (
   SELECT p.vec_id AS query_id, c.vec_id AS nid,
          {_dot_sql('p.q', 'c.q')} AS dot, p.n2 AS n2a, c.n2 AS n2b
